@@ -20,10 +20,11 @@ SURVEY.md §2.5 W1). Three physical strategies, one semantics:
   payload))`` per key. Fewer operators, but a struct aggregation
   buffer is not mutable in Spark's UnsafeRow, so Catalyst plans
   **SortAggregate** — the full input sorts on both sides of the
-  exchange. Kept as the general fallback: it supports multiple order
-  columns and payload types that can't be grouping keys (maps).
-- ``window``: the reference's literal ROW_NUMBER plan, for parity
-  tests.
+  exchange. ``via="auto"`` uses it where argmax is ineligible (multiple
+  order columns) and the payload is orderable.
+- ``window``: the reference's literal ROW_NUMBER plan — the parity
+  reference, and what ``via="auto"`` uses for map payloads, which
+  neither hash plan can serve.
 
 Tie semantics (identical for all three): ``order_cols`` must identify
 the winner uniquely — equal-order rows may only be VERBATIM duplicates
@@ -95,7 +96,7 @@ def argmax_winner_rows(
     and the batch side moves through ZERO exchanges. Correct whenever
     the deduped key count is small relative to the batch (the
     update-heavy CDC case); callers must bound the winners size (the
-    merge engine's adaptive chooser estimates it from a key sample).
+    merge engine's adaptive chooser bounds it with an HLL estimate).
     """
     keys = list(keys)
     winners = df.select(*keys, order).groupBy(*keys).agg(F.max(order).alias(order))
@@ -133,9 +134,6 @@ def lww_dedup(
 
     ``via``: "auto" (argmax where eligible; max_struct otherwise; the
     window for map payloads, which neither hash plan can serve),
-    "no_argmax" (same resolution minus argmax — the merge engine's
-    legacy two_phase/single_exchange topologies use this so an
-    argmax-ineligible schema still gets a RUNNABLE dedup),
     "argmax", "max_struct".
 
     NULL order values: rows whose order tuple is NULL lose to any
@@ -149,8 +147,8 @@ def lww_dedup(
     ``via="max_struct"``."""
     keys = list(keys)
     order_cols = list(order_cols)
-    if via in ("auto", "no_argmax") and not use_window:
-        if via == "auto" and argmax_eligible(df, keys, order_cols):
+    if via == "auto" and not use_window:
+        if argmax_eligible(df, keys, order_cols):
             via = "argmax"
         elif _has_map_type(df):
             # max(struct(..., payload)) can't ORDER a map payload either

@@ -36,8 +36,8 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("rows_deleted", T.LongType(), True),
         T.StructField("merge_ms", T.DoubleType(), True),
         # resolved physical merge plan + the adaptive chooser's reason,
-        # e.g. "single_exchange(hot_bucket_share=0.031<=2/8)" — the
-        # audit trail for per-batch plan selection (SURVEY ST9)
+        # e.g. "argmax_broadcast(dup_share~0.5012, est_keys~5970<=2000000)"
+        # — the audit trail for per-batch plan selection (SURVEY ST9)
         T.StructField("plan", T.StringType(), True),
         # which change source produced the batch — the tombstone-GC
         # low-watermark takes the MIN across sources of each source's

@@ -9,9 +9,13 @@ Semantics (the reference's incremental protocol, re-expressed Spark-first
    a no-op, which makes ``foreachBatch`` exactly-once
    (reference: ``ingested_at`` watermark advanced only post-run,
    sequencing_experiment_update.sql:1-3 + import_part.py:588-622).
-2. **LWW dedup** — max-struct aggregation per ``(conv_id, turn_idx)``
-   on ``lsn`` (reference W1 row_number pattern) with map-side partial
-   combine, so hot conversations reduce before the shuffle.
+2. **LWW dedup** — the winning ``lsn`` per ``(conv_id, turn_idx)``
+   (reference W1 row_number pattern) as a hash aggregate with map-side
+   partial combine, so hot conversations reduce before the shuffle,
+   then a semi join back to the winning rows. Per batch the adaptive
+   default picks ``append_only``, ``argmax_broadcast`` or shuffled
+   ``argmax`` (see ``_choose_plan``); argmax-ineligible schemas take
+   ``FALLBACK_PLAN``.
 3. **Partition pruning** — ``part = pmod(xxhash64(conv_id), buckets)``;
    only partitions present in the batch are touched.
 4. **Deletes** become tombstones (``_deleted = true``) that keep their
@@ -26,7 +30,7 @@ Two physical strategies (same logical semantics, verified equal):
 
 - **merge-on-read (default, ``mode="mor"``)** — the batch is LWW-
   deduped and APPENDED; no existing data is read or rewritten on the
-  write path. Reads apply the LWW max-struct over (possibly) multiple
+  write path. Reads apply LWW over (possibly) multiple
   versions per key; ``compact()`` folds partitions back to one row per
   key. This is the Iceberg MoR design: write amplification O(batch)
   instead of O(table), the right trade at 10^10 events where most
@@ -59,6 +63,13 @@ from radiant_portal_pipeline_spark.lake import LakeTable
 
 _SRC_RANK = "_src_rank"  # tie-break: batch row beats existing row at equal lsn
 
+# adaptive chooser constants (see _choose_plan)
+_DUP_SHARE_THRESHOLD = 0.03  # below: insert-dominant batch -> append_only
+_CHOOSER_RSD = 0.02  # HLL relative error of the distinct-key estimate
+# plan label for schemas the argmax plans cannot serve (map payloads,
+# multi-column ordering): lww_dedup(via="auto") + layout repartition
+FALLBACK_PLAN = "fallback"
+
 
 @dataclass
 class MergeStats:
@@ -85,28 +96,18 @@ class TranscriptMergeEngine:
         mode: str = "mor",
         lineage=None,
         merge_plan: str = "adaptive",
-        append_only_enabled: bool = True,
-        dup_share_threshold: float = 0.03,
-        chooser_rsd: float = 0.02,
         broadcast_max_winners: int = 2_000_000,
         quarantine: "LakeTable | None" = None,
-        estimate_every: int = 1,
-        hot_split_enabled: bool = True,
-        hot_split_max_convs: int = 1000,
         compact_broadcast_min_bytes: int = 256 << 20,
     ):
         if mode not in ("mor", "cow"):
             raise ValueError(f"unknown merge mode {mode!r}")
-        if merge_plan not in (
-            "adaptive", "argmax", "argmax_broadcast", "append_only",
-            "hot_split", "two_phase", "single_exchange",
-        ):
+        if merge_plan not in ("adaptive", "argmax", "argmax_broadcast", "append_only"):
             raise ValueError(f"unknown merge_plan {merge_plan!r}")
-        if merge_plan in ("append_only", "hot_split") and mode != "mor":
+        if merge_plan == "append_only" and mode != "mor":
             raise ValueError(
-                f"{merge_plan} elides (part of) the write-path dedup, which "
-                "is only correct under MoR read-side LWW — copy-on-write "
-                "must fold"
+                "append_only elides the write-path dedup, which is only "
+                "correct under MoR read-side LWW — copy-on-write must fold"
             )
         self.table = table
         # The bucket count is part of the TABLE's identity (rows are
@@ -131,24 +132,9 @@ class TranscriptMergeEngine:
         self.mode = mode
         self.merge_plan = merge_plan
         self.lineage = lineage  # optional LineageWriter (cdc.lineage)
-        # adaptive-chooser knobs (see _choose_plan): operators with
-        # unusual feeds tune or disable the elision instead of forking
-        self.append_only_enabled = bool(append_only_enabled)
-        self.dup_share_threshold = float(dup_share_threshold)
-        self.chooser_rsd = float(chooser_rsd)
+        # adaptive chooser: estimated winners above this bound take the
+        # shuffled argmax instead of broadcasting them
         self.broadcast_max_winners = int(broadcast_max_winners)
-        # hot_split plan (round-5): when the batch's distinct keys are
-        # too many to broadcast AND the duplicate mass is CONCENTRATED
-        # in a few conversations (the hot-conv insert shape), dedup
-        # ONLY the heavy conversations (tiny broadcast winners) and
-        # append the unique tail raw — MoR read-side LWW keeps reads
-        # correct, and the 10M+-winner shuffle disappears. Measured
-        # (BENCH.md round 5): the insert-shape apply is dedup-compute-
-        # bound, not write-bound (noop sink = 85% of apply), so this is
-        # the lever that moves it.
-        self.hot_split_enabled = bool(hot_split_enabled)
-        self.hot_split_max_convs = int(hot_split_max_convs)
-        self._hot_convs: list | None = None
         # compact(): minimum manifest-recorded fold size before the
         # broadcast-upgrade estimator runs (see compact) — small folds
         # are fixed-cost-bound and keep the estimator-free plan
@@ -160,22 +146,6 @@ class TranscriptMergeEngine:
         # epoch guard covers the quarantine appends, so a replayed
         # batch quarantines nothing twice.
         self.quarantine = quarantine
-        # OPT-IN plan stickiness (estimate_every > 1): a PERFORMANCE-
-        # ONLY chooser decision (argmax/argmax_broadcast) is reused for
-        # estimate_every-1 subsequent batches before re-estimating —
-        # the estimator job costs ~0.5 s per 16M-row batch (BENCH.md
-        # round 4), worth skipping on feeds with a stable character.
-        # The append_only ELISION never sticks (it trades storage on a
-        # wrong guess, so every elision is re-validated), and a sticky
-        # argmax ALSO suppresses the elision check for its window —
-        # which is why the default is 1 (estimate every batch): a mixed
-        # feed keeps full adaptivity unless the operator opts out. All
-        # plans are result-equal, so stickiness can never change
-        # results — only which equally-correct plan runs.
-        self.estimate_every = max(1, int(estimate_every))
-        self._sticky_plan: tuple[str, str] | None = None
-        self._sticky_left = 0
-        self._sticky_n = 0  # batch rows the sticky estimate came from
 
     @staticmethod
     def create_table(spark, path: str, num_buckets: int = 32) -> LakeTable:
@@ -249,235 +219,81 @@ class TranscriptMergeEngine:
     # ------------------------------------------------------------------
 
     def _choose_plan(self, df: DataFrame) -> tuple[str, str]:
-        """Resolve ``merge_plan="adaptive"`` for ONE batch.
+        """Resolve ``merge_plan="adaptive"`` for ONE batch. Returns
+        (plan, reason) — the reason goes to lineage so operators can
+        audit choices.
 
-        First preference: ``argmax`` whenever the batch schema is
-        eligible (single bigint lsn, no map payload columns — always
-        true for the transcript envelope). Measured (BENCH.md plan
-        table), argmax dominates BOTH static plans at every
-        (parallelism, skew, dup-ratio) cell: it is all-hash (no
-        SortAggregate — a struct aggregation buffer forces sort-based
-        aggregation in the max-struct plans), its winners exchange
-        carries only keys+lsn with a map-side partial combine, and its
-        full-row exchange is keyed on (keys, lsn) — unique per row, so
-        a hot conversation spreads uniformly with no salting.
+        Schemas the argmax plans cannot serve (map payload columns)
+        take ``FALLBACK_PLAN``. Every other batch takes an argmax plan:
+        measured (BENCH.md plan table), argmax dominates the max-struct
+        plans at every (parallelism, skew, dup-ratio) cell — it is
+        all-hash (a struct aggregation buffer forces SortAggregate),
+        its winners exchange carries only keys+lsn with a map-side
+        partial combine, and its full-row exchange is keyed on
+        (keys, lsn) — unique per row, so a hot conversation spreads
+        uniformly with no salting.
 
-        For ineligible schemas the old chooser decides between the
-        max-struct topologies from a cheap deterministic ~2% key-hash
-        sample: per-bucket event counts give the hot-bucket share.
-        Decision rule (P = defaultParallelism):
+        Under MoR one FULL-COVERAGE estimator job decides between the
+        argmax variants: n rows + HLL distinct keys (approx_count_distinct
+        over xxhash64(keys) at rsd=_CHOOSER_RSD — map-side partial
+        sketches, one tiny exchange, a thin columnar scan; no key-wise
+        shuffle). HLL sees EVERY key, so duplicate mass concentrated in
+        a handful of hot keys is detected deterministically. Both
+        estimates are deterministic per batch content, so replays
+        choose the same plan. Pin ``merge_plan`` to skip the estimator
+        on a known feed.
 
-        - num_buckets < P  -> two_phase (agg parallelism would be capped)
-        - max_bucket_share > 2/P -> two_phase (straggler dominates: the
-          hot task holds > 2x its fair share of the batch)
-        - otherwise -> single_exchange
+        - dup_share < _DUP_SHARE_THRESHOLD (insert-dominant) ->
+          append_only: skip the write-path dedup entirely. MoR
+          read-side LWW + compaction already guarantee the same read
+          results; eliding measures ~40% faster on a 16M-row
+          all-new-keys batch (BENCH.md). A wrong borderline guess costs
+          bounded storage until compact, never correctness.
+        - est distinct keys <= broadcast_max_winners ->
+          argmax_broadcast: the winners (keys+lsn) ship to every task
+          and the batch's FULL ROWS move through ZERO exchanges before
+          the layout repartition.
+        - else -> shuffled argmax (winners too big to broadcast).
 
-        The sample is one small extra job per batch (hash-deterministic,
-        so replays choose the same plan); an empty sample falls back to
-        the scale-safe two_phase. Returns (plan, reason) — the reason
-        goes to lineage so operators can audit choices."""
+        CoW folds the batch with every existing key of the touched
+        buckets, so batch-scale estimates do not apply: shuffled argmax.
+        """
         from radiant_portal_pipeline_spark.cdc.dedup import argmax_eligible
 
-        keys = [S.PART_COL, *self.key_cols]
-        if argmax_eligible(df, keys, [self.lsn_col]):
-            # One FULL-COVERAGE estimator job decides both remaining
-            # choices: n rows + HLL distinct keys (approx_count_distinct
-            # over xxhash64(keys) at rsd=chooser_rsd — map-side partial
-            # sketches, one tiny exchange, a thin columnar scan; no
-            # key-wise shuffle). rsd=0.02 measures ~0.5 s per 8M-row
-            # batch at 8 cores (0.01 costs 2.4x for precision the
-            # thresholds don't need); pin merge_plan to a static choice
-            # to skip the estimator entirely on a known feed. HLL sees EVERY key, so duplicate mass
-            # concentrated in a handful of hot keys is detected
-            # deterministically — the round-3 ~2% key-hash sample
-            # caught each hot key only w.p. 2%/batch and such feeds
-            # elided on most batches (the documented blind spot, now
-            # closed). Both estimates are deterministic per batch
-            # content, so replays choose the same plan.
-            #
-            # - dup_share < threshold (insert-dominant) -> append_only:
-            #   skip the write-path dedup entirely. MoR read-side LWW +
-            #   compaction already guarantee the same read results;
-            #   eliding measures ~40% faster on a 16M-row all-new-keys
-            #   batch (BENCH.md). A wrong borderline guess costs
-            #   bounded storage until compact, never correctness.
-            # - est distinct keys <= broadcast_max_winners ->
-            #   argmax_broadcast: the winners (keys+lsn) ship to every
-            #   task and the batch's FULL ROWS move through ZERO
-            #   exchanges — the full-row shuffle is the dominant memory
-            #   traffic of the update-heavy path (BENCH.md round-4).
-            # - else -> shuffled argmax (winners too big to broadcast).
-            if self.mode == "mor":
-                if self._sticky_left > 0 and self._sticky_plan is not None:
-                    # GUARD the replayed decision with the cheap half of
-                    # the estimator (count only, no HLL): a sticky
-                    # argmax_broadcast decision taken on a small batch
-                    # would otherwise broadcast an unbounded winners set
-                    # when the feed's volume jumps mid-window (round-4
-                    # advisor) — OOM risk, not a correctness risk. A
-                    # materially different batch size (>2x either way)
-                    # invalidates the stickiness and falls through to
-                    # the full estimate.
-                    n_now = df.count()
-                    lo_ok = self._sticky_n / 2 <= n_now <= self._sticky_n * 2
-                    if lo_ok:
-                        self._sticky_left -= 1
-                        plan, why = self._sticky_plan
-                        return plan, f"sticky[{why}]"
-                    self._sticky_plan, self._sticky_left = None, 0
-                row = self._estimate_batch(df)
-                if row is not None and row["n"]:
-                    dup_share = max(0.0, 1.0 - row["nk"] / row["n"])
-                    if (
-                        self.append_only_enabled
-                        and dup_share < self.dup_share_threshold
-                    ):
-                        # never sticks: each elision is re-validated
-                        self._sticky_plan, self._sticky_left = None, 0
-                        return (
-                            "append_only",
-                            f"dup_share~{dup_share:.4f}<"
-                            f"{self.dup_share_threshold} (insert-dominant)",
-                        )
-                    if row["nk"] <= self.broadcast_max_winners:
-                        choice = (
-                            "argmax_broadcast",
-                            f"dup_share~{dup_share:.4f}, est_keys~{row['nk']}"
-                            f"<={self.broadcast_max_winners}",
-                        )
-                    else:
-                        # winners too big to broadcast. If the dup mass
-                        # is CONCENTRATED in a few conversations, dedup
-                        # only those and append the unique tail raw
-                        # (hot_split) — the O(distinct keys) winners
-                        # shuffle is the dominant cost of this shape
-                        choice = None
-                        if self.hot_split_enabled:
-                            hot = self._probe_hot_convs(
-                                df, int(row["n"]), int(row["nk"])
-                            )
-                            if hot is not None:
-                                convs, mass_frac = hot
-                                self._hot_convs = convs
-                                choice = (
-                                    "hot_split",
-                                    f"est_keys~{row['nk']}>"
-                                    f"{self.broadcast_max_winners}, "
-                                    f"{len(convs)} hot convs carry "
-                                    f"~{mass_frac:.0%} of dup mass",
-                                )
-                        if choice is None:
-                            choice = (
-                                "argmax",
-                                f"est_keys~{row['nk']}>"
-                                f"{self.broadcast_max_winners}",
-                            )
-                    self._sticky_plan = choice
-                    self._sticky_left = self.estimate_every - 1
-                    self._sticky_n = int(row["n"])
-                    return choice
-            return "argmax", "argmax_eligible(dominates both static plans)"
-        p = max(int(self.table.spark.sparkContext.defaultParallelism), 1)
-        if self.num_buckets < p:
-            return "two_phase", f"buckets({self.num_buckets})<parallelism({p})"
-        sample = df.filter(
-            F.pmod(F.xxhash64(*self.key_cols, F.lit(17)), F.lit(50)) == 0
-        )
-        row = (
-            sample.groupBy(S.PART_COL)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.sum("n").alias("n"), F.max("n").alias("hot"))
-            .head()
-        )
-        if row is None or not row["n"]:
-            return "two_phase", "empty_sample"
-        share = row["hot"] / row["n"]
-        if share > 2.0 / p:
-            return "two_phase", f"hot_bucket_share={share:.3f}>2/{p}"
-        return "single_exchange", f"hot_bucket_share={share:.3f}<=2/{p}"
+        if not argmax_eligible(df, [S.PART_COL, *self.key_cols], [self.lsn_col]):
+            return FALLBACK_PLAN, "argmax_ineligible"
+        if self.mode == "mor":
+            row = self._estimate_batch(df)
+            if row is not None and row["n"]:
+                dup_share = max(0.0, 1.0 - row["nk"] / row["n"])
+                if dup_share < _DUP_SHARE_THRESHOLD:
+                    return (
+                        "append_only",
+                        f"dup_share~{dup_share:.4f}<"
+                        f"{_DUP_SHARE_THRESHOLD} (insert-dominant)",
+                    )
+                if row["nk"] <= self.broadcast_max_winners:
+                    return (
+                        "argmax_broadcast",
+                        f"dup_share~{dup_share:.4f}, est_keys~{row['nk']}"
+                        f"<={self.broadcast_max_winners}",
+                    )
+                return "argmax", f"est_keys~{row['nk']}>{self.broadcast_max_winners}"
+        return "argmax", "argmax_eligible"
 
     def _estimate_batch(self, df: DataFrame):
         """The chooser's one full-coverage estimator job: row count +
-        HLL distinct keys (single definition — the adaptive chooser and
-        the static hot_split path must never drift)."""
+        HLL distinct keys (shared by the adaptive chooser and compact's
+        broadcast upgrade)."""
         return df.agg(
             F.count(F.lit(1)).alias("n"),
             F.approx_count_distinct(
-                F.xxhash64(*self.key_cols), self.chooser_rsd
+                F.xxhash64(*self.key_cols), _CHOOSER_RSD
             ).alias("nk"),
         ).head()
 
-    def _probe_hot_convs(
-        self, df: DataFrame, n: int, nk: int
-    ) -> tuple[list, float] | None:
-        """Heavy-hitter probe for the hot_split decision: a 1%
-        ROW-level deterministic sample (hash of key+lsn — hashing the
-        conversation alone would put whole conversations in or out of
-        the sample), per-conversation counts, keep conversations with
-        >=20 sampled rows (~>=2,000 true rows). Returns (conv list,
-        estimated fraction of the batch's duplicate mass they carry)
-        when few enough conversations cover >=50% of the dup mass;
-        None otherwise (fall back to shuffled argmax). Deterministic
-        per batch content, so replays choose the same plan."""
-        total_dups = n - nk
-        if total_dups <= 0:
-            return None
-        conv = self.key_cols[0]
-        # adaptive rate: ~160k sampled rows regardless of batch size
-        # (1/100 at the 16M design point, full scan below 160k rows —
-        # a fixed 1% starves the duplicate-evidence signal on small
-        # batches)
-        mod = max(1, min(100, n // 160_000))
-        sample = df
-        if mod > 1:
-            sample = df.filter(
-                F.pmod(
-                    F.xxhash64(*self.key_cols, self.lsn_col, F.lit(43)),
-                    F.lit(mod),
-                )
-                == 0
-            )
-        # per-conversation sampled rows AND sampled distinct keys: a
-        # conversation is heavy only when its sampled rows materially
-        # EXCEED its sampled keys (duplicate evidence) — a mega-
-        # conversation backfill of unique keys has c ~= ck and must NOT
-        # be flagged, because its "winners" are its entire row set and
-        # broadcasting them is exactly the OOM the broadcast bound
-        # exists to prevent (round-5 review finding #1)
-        rows = (
-            sample.groupBy(conv)
-            .agg(
-                F.count(F.lit(1)).alias("c"),
-                F.countDistinct(*self.key_cols).alias("ck"),
-            )
-            .filter(
-                (F.col("c") * mod >= 2_000)
-                & ((F.col("c") - F.col("ck")) * mod >= 1_000)
-            )
-            .orderBy(F.desc("c"), F.asc(conv))
-            .limit(self.hot_split_max_convs + 1)
-            .collect()
-        )
-        if not rows or len(rows) > self.hot_split_max_convs:
-            return None
-        # conservative winners bound: mod x the sampled distinct keys
-        # OVERestimates the heavy set's true key count (every true key
-        # with many duplicates is sampled with near-certainty but
-        # counts once) — the broadcast winners must fit the same bound
-        # the argmax_broadcast path enforces
-        est_heavy_keys = sum(r["ck"] for r in rows) * mod
-        if est_heavy_keys > self.broadcast_max_winners:
-            return None
-        est_heavy_dups = sum(r["c"] - r["ck"] for r in rows) * mod
-        if est_heavy_dups < 0.5 * total_dups:
-            return None
-        return [r[conv] for r in rows], min(
-            est_heavy_dups / total_dups, 1.0
-        )
-
     def _dedup_and_layout(
-        self, df: DataFrame, keys, order_cols, plan: str | None = None,
-        source_bucketed: bool = False,
+        self, df: DataFrame, keys, order_cols, plan: str | None = None
     ) -> DataFrame:
         """LWW + write layout, per ``merge_plan``.
 
@@ -487,92 +303,28 @@ class TranscriptMergeEngine:
         keys+lsn — unique per row, so hot conversations spread
         uniformly), partition-local distinct for verbatim replays (its
         exchange elides under the subset rule), then repartition the
-        deduped output by bucket for the write. Zero sorts; dominates
-        both legacy plans at every measured (cores, skew, dup) cell
-        (BENCH.md plan table).
+        deduped output by bucket for the write. Zero sorts.
 
-        ``two_phase`` (max-struct; legacy scale-safe plan): aggregate
-        FIRST — map-side partial combine before the exchange on the
-        FULL group key, so a hot conversation reduces inside every
-        input partition before data moves; THEN repartition the deduped
-        output. Two exchanges; the aggregation is a SortAggregate
-        (struct buffer), which is why argmax beats it.
+        ``argmax_broadcast``: the same with the winners broadcast, so
+        the semi join is a BroadcastHashJoin and the batch's full rows
+        reach the layout repartition through no exchange at all.
 
-        ``single_exchange`` (max-struct): repartition(num_buckets,
-        part) first; because part = f(conv_id), HashPartitioning(part)
-        satisfies the ClusteredDistribution of groupBy(part, conv_id,
-        turn_idx) (subset rule) and the aggregation reuses the
-        exchange. One exchange total — but it carries the RAW batch
-        with no partial reduction, and the hot bucket lands in ONE
-        task (the round-1 scaling ceiling).
+        ``append_only`` (MoR only): no write-path dedup; read-side LWW
+        resolves duplicates and ``compact()`` folds them.
 
-        Both legacy plans are kept selectable as the comparison
-        baselines and as the fallback for schemas the argmax plan can't
-        serve (multi-column ordering, map-typed payloads)."""
+        ``FALLBACK_PLAN`` (argmax-ineligible schemas): ``lww_dedup``
+        with ``via="auto"`` — max-struct for orderable payloads, the
+        window plan for map-bearing ones — then the layout
+        repartition."""
         plan = plan or self.merge_plan
         if plan == "adaptive":  # callers resolve per batch; stay safe here
             from radiant_portal_pipeline_spark.cdc.dedup import argmax_eligible
 
             plan = (
-                "argmax" if argmax_eligible(df, keys, order_cols) else "two_phase"
+                "argmax" if argmax_eligible(df, keys, order_cols) else FALLBACK_PLAN
             )
         if plan == "append_only":
-            # write-path dedup elided (insert-dominant batch, MoR):
-            # read-side LWW resolves any duplicates; compact() folds
-            if source_bucketed:
-                return df  # see merge_batch(source_bucketed=True)
             return df.repartition(self.num_buckets, F.col(S.PART_COL))
-        if plan == "hot_split":
-            # the concentrated-duplicates insert shape: dedup ONLY the
-            # heavy conversations (map-side combine collapses them to a
-            # handful of winners; broadcast semi join, zero full-row
-            # exchanges), append the unique tail RAW — read-side LWW
-            # resolves any tail duplicates, compact() folds them. The
-            # only full-row exchange left is the layout repartition
-            # every plan needs. coalesce(.., False) sends NULL-conv
-            # rows to the tail so the part column's raise_error guard
-            # still reaches them.
-            from radiant_portal_pipeline_spark.cdc.dedup import argmax_winner_rows
-
-            if self.merge_plan == "hot_split":
-                # STATIC plan: probe THIS batch, never cache across
-                # batches — a first insert-only batch would otherwise
-                # pin an empty list and void the plan for the engine's
-                # lifetime, and the hot set can shift mid-stream
-                # (round-5 review finding #2)
-                est = self._estimate_batch(df)
-                hot = self._probe_hot_convs(df, int(est["n"]), int(est["nk"]))
-                convs = hot[0] if hot is not None else []
-            else:
-                # adaptive: _choose_plan probed this batch (or a sticky
-                # window is replaying its decision) and stored the list
-                convs = list(self._hot_convs or [])
-            if not convs:
-                # no concentrated conversations found — degenerate to
-                # the pure append (read-side LWW still correct)
-                if source_bucketed:
-                    return df
-                return df.repartition(self.num_buckets, F.col(S.PART_COL))
-            conv = self.key_cols[0]
-            is_hot = F.coalesce(F.col(conv).isin(convs), F.lit(False))
-            heavy = df.filter(is_hot)
-            tail = df.filter(~is_hot)
-            winners = argmax_winner_rows(
-                heavy, keys, order_cols[0], broadcast=True
-            ).dropDuplicates()
-            if source_bucketed:
-                # tail keeps the declared clustering (no exchange); the
-                # WINNERS side is a few hundred rows spread over the
-                # dropDuplicates exchange's partitions — repartition
-                # only that tiny side by bucket so it doesn't fragment
-                # the write into per-task-per-bucket files
-                return winners.select(*df.columns).repartition(
-                    self.num_buckets, F.col(S.PART_COL)
-                ).unionByName(tail.select(*df.columns))
-            out = winners.select(*df.columns).unionByName(
-                tail.select(*df.columns)
-            )
-            return out.repartition(self.num_buckets, F.col(S.PART_COL))
         if plan in ("argmax", "argmax_broadcast"):
             from radiant_portal_pipeline_spark.cdc.dedup import argmax_winner_rows
 
@@ -589,33 +341,12 @@ class TranscriptMergeEngine:
             rows = argmax_winner_rows(
                 df, keys, order_cols[0], broadcast=(plan == "argmax_broadcast")
             )
-            if source_bucketed and plan == "argmax_broadcast":
-                # TRULY zero full-row exchanges: the broadcast join
-                # preserved the source's bucket clustering, and the
-                # verbatim-replay distinct is ALSO elided — under MoR
-                # it bounds storage, not correctness (identical copies
-                # of a winner are read-side-LWW'd away, exactly the
-                # append_only argument), and keeping it would insert an
-                # all-columns shuffle that destroys the clustering the
-                # caller declared (measured: 512 mixed files/batch and
-                # linearly growing manifest churn). compact() folds the
-                # rare verbatim copies.
-                return rows.select(*df.columns)
             laid = rows.repartition(self.num_buckets, F.col(S.PART_COL))
             return laid.dropDuplicates().select(*df.columns)
-        # legacy topologies: "no_argmax" resolves to max_struct for
-        # orderable payloads and to the window plan for map-bearing
-        # ones — a hard via="max_struct" here would send exactly the
-        # schemas the fallback exists for into INVALID_ORDERING_TYPE
-        if plan == "single_exchange":
-            laid = df.repartition(self.num_buckets, F.col(S.PART_COL))
-            return lww_dedup(laid, keys, order_cols, via="no_argmax")
-        deduped = lww_dedup(df, keys, order_cols, via="no_argmax")
+        deduped = lww_dedup(df, keys, order_cols)
         return deduped.repartition(self.num_buckets, F.col(S.PART_COL))
 
-    def _prepare_batch(
-        self, batch: DataFrame, source_bucketed: bool = False
-    ) -> tuple[DataFrame, str, str]:
+    def _prepare_batch(self, batch: DataFrame) -> tuple[DataFrame, str, str]:
         """LWW-dedup the batch, fold op -> tombstone flag, add bucket,
         lay out for the partitioned write (see _dedup_and_layout).
         Returns (prepared, plan, reason) — plan is the resolved
@@ -652,24 +383,13 @@ class TranscriptMergeEngine:
         if plan == "adaptive":
             plan, reason = self._choose_plan(slim)
         deduped = self._dedup_and_layout(
-            slim, [S.PART_COL, *self.key_cols], [self.lsn_col], plan=plan,
-            source_bucketed=source_bucketed,
+            slim, [S.PART_COL, *self.key_cols], [self.lsn_col], plan=plan
         )
         return deduped, plan, reason
 
-    def merge_batch(
-        self, batch: DataFrame, epoch: int, source_bucketed: bool = False
-    ) -> MergeStats:
-        """Apply one micro-batch. ``source_bucketed=True`` declares that
-        the batch's Spark partitions are already clustered by the
-        engine's bucket hash (a feed KEYED BY CONVERSATION — Kafka
-        partitioned on conv_id, or per-bucket feed files): the layout
-        repartition — the only full-row exchange of the broadcast/
-        append/hot_split plans — is then elided, so those plans run
-        ZERO full-row exchanges end to end. A wrong declaration can
-        never corrupt data (the bucket COLUMN, not the exchange,
-        decides file placement); it only costs small files (each task
-        writes one file per bucket value it holds). MoR only."""
+    def merge_batch(self, batch: DataFrame, epoch: int) -> MergeStats:
+        """Apply one micro-batch under ``epoch`` (a replayed epoch is a
+        no-op that returns ``skipped=True``)."""
         t0 = time.time()
         snap = self.table.snapshot()
         if snap.applied.get(self.source_id, -1) >= epoch:
@@ -677,13 +397,7 @@ class TranscriptMergeEngine:
 
         if self.quarantine is not None:
             batch = self._split_quarantine(batch, epoch)
-        if source_bucketed and self.mode != "mor":
-            # CoW unions the batch with existing bucket files read back
-            # from the table — the declared clustering is lost there
-            raise ValueError("source_bucketed applies to MoR merges only")
-        prepared, plan, plan_reason = self._prepare_batch(
-            batch, source_bucketed=source_bucketed
-        )
+        prepared, plan, plan_reason = self._prepare_batch(batch)
         lineage_checkpointed = self.lineage is not None
         if lineage_checkpointed:
             prepared = prepared.localCheckpoint(eager=True)
@@ -703,13 +417,9 @@ class TranscriptMergeEngine:
                 plan=plan,
             )
             lineage_batch = prepared
-            writes_undeduped = plan in ("append_only", "hot_split") or (
-                source_bucketed and plan == "argmax_broadcast"
-            )
-            if writes_undeduped and self.lineage is not None:
+            if plan == "append_only" and self.lineage is not None:
                 # lineage I/U/D counts are per KEY (LineageWriter.record
-                # contract) but append_only writes the UN-deduped batch
-                # and hot_split writes a raw TAIL (round-5 review);
+                # contract) but append_only writes the UN-deduped batch;
                 # fold a SLIM projection just for the metrics — key
                 # columns + lsn + tombstone, no payload, so the count
                 # pass stays cheap and the write path stays elided
@@ -763,8 +473,8 @@ class TranscriptMergeEngine:
                 F.raise_error(
                     F.lit(
                         f"CoW argmax ordering fold requires "
-                        f"{self.lsn_col} < 2^62; use "
-                        f"merge_plan='two_phase' for larger offsets"
+                        f"{self.lsn_col} < 2^62; the batch carries a "
+                        f"larger offset"
                     )
                 ).cast("bigint")
             )

@@ -35,6 +35,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _covering_bins(lo: str, hi: str, w, max_bins: int, message: str):
+    """The bins ``[lo, hi]`` covers, or ``raise_error(message)`` when
+    ``hi < lo`` or the span exceeds ``max_bins``. The sequence's upper
+    bound is clamped to ``max_bins`` past ``lo``'s bin: constant folding
+    evaluates ``sequence`` over literal bounds at plan time, ahead of
+    the ``CASE WHEN``, so an unclamped runaway span would be built
+    before the guard fires. Valid rows never reach the clamp."""
+    lo_bin = F.floor(F.col(lo) / w)
+    hi_bin = F.floor(F.col(hi) / w)
+    ok = (F.col(hi) >= F.col(lo)) & (hi_bin - lo_bin < F.lit(max_bins))
+    capped = F.greatest(lo_bin, F.least(hi_bin, lo_bin + F.lit(max_bins - 1)))
+    return F.when(ok, F.sequence(lo_bin, capped)).otherwise(
+        F.raise_error(F.lit(message)).cast("array<bigint>")
+    )
+
+
 def range_bin_join(
     points: DataFrame,
     intervals: DataFrame,
@@ -56,19 +72,11 @@ def range_bin_join(
     if bin_width <= 0:
         raise ValueError(f"bin_width must be positive, got {bin_width}")
     w = F.lit(float(bin_width))
-    lo_bin = F.floor(F.col(lo_col) / w)
-    hi_bin = F.floor(F.col(hi_col) / w)
-    span_ok = (F.col(hi_col) >= F.col(lo_col)) & (
-        hi_bin - lo_bin < F.lit(max_bins_per_interval)
-    )
-    bins = F.when(span_ok, F.sequence(lo_bin, hi_bin)).otherwise(
-        F.raise_error(
-            F.lit(
-                f"range_bin_join: interval spans more than "
-                f"{max_bins_per_interval} bins of width {bin_width} (or "
-                f"{hi_col} < {lo_col}) — raise bin_width or fix the data"
-            )
-        ).cast("array<bigint>")
+    bins = _covering_bins(
+        lo_col, hi_col, w, max_bins_per_interval,
+        f"range_bin_join: interval spans more than "
+        f"{max_bins_per_interval} bins of width {bin_width} (or "
+        f"{hi_col} < {lo_col}) — raise bin_width or fix the data",
     )
     binned_iv = intervals.withColumn("_bin", F.explode(bins))
     binned_pt = points.withColumn("_bin", F.floor(F.col(point_col) / w))
@@ -111,19 +119,11 @@ def range_bin_overlap_join(
     w = F.lit(float(bin_width))
 
     def binned(df: DataFrame, lo: str, hi: str) -> DataFrame:
-        lo_bin = F.floor(F.col(lo) / w)
-        hi_bin = F.floor(F.col(hi) / w)
-        ok = (F.col(hi) >= F.col(lo)) & (
-            hi_bin - lo_bin < F.lit(max_bins_per_interval)
-        )
-        bins = F.when(ok, F.sequence(lo_bin, hi_bin)).otherwise(
-            F.raise_error(
-                F.lit(
-                    f"range_bin_overlap_join: interval spans more than "
-                    f"{max_bins_per_interval} bins of width {bin_width} "
-                    f"(or {hi} < {lo}) — raise bin_width or fix the data"
-                )
-            ).cast("array<bigint>")
+        bins = _covering_bins(
+            lo, hi, w, max_bins_per_interval,
+            f"range_bin_overlap_join: interval spans more than "
+            f"{max_bins_per_interval} bins of width {bin_width} "
+            f"(or {hi} < {lo}) — raise bin_width or fix the data",
         )
         return df.withColumn("_bin", F.explode(bins))
 

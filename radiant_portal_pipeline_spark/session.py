@@ -1,7 +1,9 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode testing runs on ``local[$SPARK_GRAFT_CPUS]``; on a real
-cluster the same builder is used minus the master override (spark-submit
+Local-mode testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the
+host's CPU count) with ``$SPARK_GRAFT_DRIVER_MEM`` of driver heap
+(default: half of physical memory, capped at 24g); on a real cluster
+the same builder is used minus the master override (spark-submit
 provides it). Shuffle partitions default to the local core count — at
 100 TB scale the deployment sets ``spark.sql.shuffle.partitions`` to
 ~2-3x total cores and relies on AQE coalescing, configured here.
@@ -13,6 +15,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+_DRIVER_MEM_CAP_MB = 24 << 10
+
+
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 24g: the driver JVM
+    shares the box with Python workers, off-heap buffers and the OS,
+    so a heap sized past physical memory gets the JVM OOM-killed
+    instead of failing with a Java error."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(_DRIVER_MEM_CAP_MB, phys_mb // 2)}m"
+
 
 def get_spark(
     app_name: str = "radiant_portal_pipeline_spark",
@@ -20,7 +33,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -43,7 +56,10 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     # deployment/config escape hatch: ";"-separated key=value pairs,
     # applied before the caller's extra_conf (so code-level settings

@@ -382,40 +382,43 @@ def test_rescale_abort_is_self_cleaning(spark, tmp_path):
         eng.rescale(target, new_buckets=16)
 
 
-def test_legacy_plans_execute_on_map_payload(spark):
-    """The fallback topologies must be RUNNABLE on the schemas the
-    fallback exists for: a map payload can't ride the max-struct
-    (INVALID_ORDERING_TYPE), so via="no_argmax" must resolve to the
-    window plan — a hard max_struct crashed exactly the batches the
-    adaptive chooser routes to two_phase (round-3 review finding)."""
-    from pyspark.sql import functions as F
-
-    from radiant_portal_pipeline_spark.cdc import schemas as S
+def test_legacy_plans_execute_on_map_payload(spark, tmp_path):
+    """A map payload makes a batch argmax-ineligible (maps can't be
+    grouping keys or be ordered inside a max-struct). Such batches
+    must merge through the fallback plan in BOTH modes — the CoW fold
+    adds a second order column on top — and read back equal to the
+    window-plan parity reference."""
     from radiant_portal_pipeline_spark.cdc.feed import synthetic_feed
-    from radiant_portal_pipeline_spark.cdc.merge import (
-        TranscriptMergeEngine,
-        part_expr,
-    )
+    from radiant_portal_pipeline_spark.cdc.lineage import LineageWriter
+    from radiant_portal_pipeline_spark.cdc.merge import FALLBACK_PLAN
 
     feed = (
-        synthetic_feed(spark, 2000)
+        synthetic_feed(spark, 2000, n_convs=23, dup_frac=0.05)
         .withColumn("attrs", F.create_map(F.lit("k"), F.col("role")))
-        .withColumn(S.PART_COL, part_expr("conv_id", 16))
-        .withColumn(S.DELETED_COL, F.col("op") == F.lit("D"))
-        .drop("op", "commit_epoch")
+        .localCheckpoint(eager=True)
     )
-    eng = TranscriptMergeEngine.__new__(TranscriptMergeEngine)
-    eng.num_buckets = 16
-    eng.key_cols = ["conv_id", "turn_idx"]
-    eng.lsn_col = "lsn"
-    keys = [S.PART_COL, "conv_id", "turn_idx"]
-    counts = {
-        plan: TranscriptMergeEngine._dedup_and_layout(
-            eng, feed, keys, ["lsn"], plan=plan
-        ).count()
-        for plan in ("two_phase", "single_exchange", "adaptive")
-    }
-    assert len(set(counts.values())) == 1 and counts["two_phase"] > 0, counts
+    ref = lww_dedup(feed, ["conv_id", "turn_idx"], ["lsn"], use_window=True)
+
+    def by_key(df):
+        return {
+            (r["conv_id"], r["turn_idx"]): (r["lsn"], r["text"], r["attrs"])
+            for r in df.collect()
+        }
+
+    want = by_key(ref.filter(F.col("op") != "D"))
+    assert want
+    for mode in ("mor", "cow"):
+        tbl = TranscriptMergeEngine.create_table(
+            spark, str(tmp_path / mode), num_buckets=8
+        )
+        lineage = LineageWriter(spark, str(tmp_path / f"lin_{mode}"))
+        eng = TranscriptMergeEngine(tbl, mode=mode, lineage=lineage)
+        for e in range(2):
+            st = eng.merge_batch(feed.filter(F.col("commit_epoch") % 2 == e), epoch=e)
+            assert st.plan == FALLBACK_PLAN, (mode, st.plan)
+        assert by_key(eng.current_state()) == want, mode
+        plans = {r["plan"] for r in lineage.read().select("plan").collect()}
+        assert plans == {f"{FALLBACK_PLAN}(argmax_ineligible)"}, (mode, plans)
 
 
 def test_nested_map_detection(spark):
@@ -631,19 +634,6 @@ def test_argmax_broadcast_equals_shuffled_and_chooser_picks_it(spark, tmp_path):
     ]
 
 
-def test_chooser_knobs_disable_elision(spark, tmp_path):
-    """append_only_enabled=False must route insert-dominant batches to
-    a folding plan (operators with few-hot-key feeds opt out without
-    forking the chooser — round-3 advice)."""
-    tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=4)
-    eng = TranscriptMergeEngine(
-        tbl, num_buckets=4, merge_plan="adaptive", append_only_enabled=False
-    )
-    batch = _keyed_batch(spark, {(f"c{i}", 0): 1 for i in range(1000)}, 0)
-    stats = eng.merge_batch(batch, epoch=0)
-    assert stats.plan != "append_only"
-
-
 def test_quarantine_dead_letters_instead_of_failing(spark, tmp_path):
     """With a quarantine table configured, contract-violating rows
     (NULL merge key / NULL lsn) are split out with a reason and the
@@ -685,294 +675,6 @@ def test_quarantine_dead_letters_instead_of_failing(spark, tmp_path):
     eng2 = TranscriptMergeEngine(tbl2, num_buckets=4)
     with pytest.raises(Exception, match="NULL"):
         eng2.merge_batch(batch, epoch=0)
-
-
-def test_plan_stickiness_opt_in(spark, tmp_path):
-    """estimate_every=N reuses a performance-only plan decision for
-    N-1 batches (skipping the estimator job); append_only never sticks,
-    and the default (1) estimates every batch."""
-    tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=4)
-    eng = TranscriptMergeEngine(tbl, num_buckets=4, estimate_every=3)
-    dup = {(f"k{i}", 0): 5 for i in range(200)}  # update-heavy
-    lsn = 0
-    reasons = []
-    for e in range(4):
-        batch = _keyed_batch(spark, dup, lsn)
-        lsn += 10_000
-        st = eng.merge_batch(batch, epoch=e)
-        assert st.plan == "argmax_broadcast"
-        reasons.append(st.plan)
-    # lineage-free check: the sticky window resets after N batches —
-    # probe the internal counter contract directly
-    assert eng.estimate_every == 3 and eng._sticky_plan is not None
-
-    # append_only never sticks: consecutive insert batches re-estimate
-    # and keep eliding
-    tbl3 = TranscriptMergeEngine.create_table(
-        spark, str(tmp_path / "t3"), num_buckets=4
-    )
-    eng3 = TranscriptMergeEngine(tbl3, num_buckets=4, estimate_every=2)
-    ins = _keyed_batch(spark, {(f"i{i}", 0): 1 for i in range(1000)}, 0)
-    st = eng3.merge_batch(ins, epoch=0)
-    assert st.plan == "append_only"
-    st = eng3.merge_batch(
-        _keyed_batch(spark, {(f"j{i}", 0): 1 for i in range(1000)}, 50_000), epoch=1
-    )
-    assert st.plan == "append_only"  # re-validated, not stuck elsewhere
-
-
-def test_sticky_plan_invalidated_by_batch_size_jump(spark, tmp_path):
-    """The sticky guard (round-4 advisor): a reused argmax_broadcast
-    decision must be re-estimated when the batch volume jumps
-    materially (>2x), else a mid-window cardinality jump broadcasts an
-    unbounded winners set. The guard runs only the cheap count, and a
-    similar-sized batch still rides the sticky window."""
-    tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=4)
-    eng = TranscriptMergeEngine(
-        tbl, num_buckets=4, estimate_every=5, broadcast_max_winners=500
-    )
-    dup = {(f"k{i}", 0): 5 for i in range(200)}  # 1000 rows, 200 keys
-    st = eng.merge_batch(_keyed_batch(spark, dup, 0), epoch=0)
-    assert st.plan == "argmax_broadcast" and eng._sticky_plan is not None
-    # similar size -> sticky window holds (no re-estimate)
-    st = eng.merge_batch(_keyed_batch(spark, dup, 10_000), epoch=1)
-    assert st.plan == "argmax_broadcast"
-    assert eng._sticky_left == 3  # consumed one sticky slot
-    # 10x the rows AND 10x the keys: over broadcast_max_winners. The
-    # guard must invalidate stickiness and the fresh estimate must
-    # choose the shuffled argmax, NOT replay the broadcast decision.
-    big = {(f"b{i}", 0): 5 for i in range(2000)}  # 10k rows, 2000 keys
-    st = eng.merge_batch(_keyed_batch(spark, big, 20_000), epoch=2)
-    assert st.plan == "argmax"
-
-
-def test_hot_split_equals_folding_plans_and_chooser_picks_it(spark, tmp_path):
-    """hot_split (round-5): dedup only the heavy conversations, append
-    the unique tail raw. Must be READ-equivalent to the shuffled argmax
-    on a concentrated-duplicates insert-shape feed (hot conv + mostly
-    unique tail, verbatim replays included), and the adaptive chooser
-    must pick it when winners exceed the broadcast bound but the dup
-    mass is concentrated."""
-    from pyspark.sql import functions as F
-
-    from radiant_portal_pipeline_spark.cdc.feed import synthetic_feed
-
-    # 40k events, 12k convs -> ~32k distinct keys; hot conv takes 20%;
-    # dup_frac adds verbatim replays on both sides of the split
-    feed = synthetic_feed(
-        spark, 40_000, n_convs=12_007, dup_frac=0.03, hot_every=5
-    ).localCheckpoint(eager=True)
-
-    def replay(plan, name, **kw):
-        tbl = TranscriptMergeEngine.create_table(
-            spark, str(tmp_path / name), num_buckets=8
-        )
-        eng = TranscriptMergeEngine(tbl, num_buckets=8, merge_plan=plan, **kw)
-        stats = []
-        for e in range(2):
-            stats.append(
-                eng.merge_batch(feed.filter(F.col("commit_epoch") % 2 == e), epoch=e)
-            )
-        return eng, stats
-
-    hs, hs_stats = replay("hot_split", "hs")
-    am, _ = replay("argmax", "am")
-    want = sorted(map(tuple, am.current_state().collect()))
-    got = sorted(map(tuple, hs.current_state().collect()))
-    assert got == want and len(got) > 0
-    # the heavy conversation was deduped at write time: the physical
-    # hot-conv rows are bounded by its key count, not its event count
-    hot_rows = hs.table.read().filter(F.col("conv_id") == "conv-hot").count()
-    assert hot_rows <= 2 * 200  # 200 hot keys x 2 batches
-
-    # adaptive chooser: winners bound forced below the key count and
-    # dup mass concentrated in conv-hot -> hot_split
-    ad, ad_stats = replay(
-        "adaptive", "ad", broadcast_max_winners=5_000,
-        dup_share_threshold=0.01,
-    )
-    assert sorted(map(tuple, ad.current_state().collect())) == want
-    assert all(s.plan == "hot_split" for s in ad_stats), [
-        s.plan for s in ad_stats
-    ]
-
-    # compaction folds the raw tail: post-compact physical rows equal
-    # the folding plan's post-compact rows
-    hs.compact()
-    am.compact()
-    assert hs.table.read().count() == am.table.read().count()
-    assert sorted(map(tuple, hs.current_state().collect())) == want
-
-
-def test_hot_split_spread_duplicates_fall_back_to_argmax(spark, tmp_path):
-    """Duplicates spread across MANY conversations (no concentration):
-    the probe must find no heavy conversations and the chooser must
-    fall back to the shuffled argmax, never hot_split."""
-    from pyspark.sql import functions as F
-
-    from radiant_portal_pipeline_spark.cdc.feed import synthetic_feed
-
-    # hot_every=0 -> no hot conversation; 400 convs x 50 turns over
-    # 40k events -> every key ~2 events: dup mass 50%, fully spread
-    feed = synthetic_feed(
-        spark, 40_000, n_convs=397, hot_every=1_000_000_000
-    ).localCheckpoint(eager=True)
-    tbl = TranscriptMergeEngine.create_table(
-        spark, str(tmp_path / "t"), num_buckets=8
-    )
-    eng = TranscriptMergeEngine(
-        tbl, num_buckets=8, merge_plan="adaptive", broadcast_max_winners=1_000
-    )
-    st = eng.merge_batch(feed, epoch=0)
-    assert st.plan == "argmax", st.plan
-
-
-def test_hot_split_never_broadcasts_unique_key_mega_conv(spark, tmp_path):
-    """Round-5 review finding #1: a mega-conversation backfill of
-    UNIQUE keys concentrates rows but not duplicates — its 'winners'
-    are its entire row set, so flagging it hot would broadcast past
-    broadcast_max_winners (OOM class). The probe must require
-    duplicate evidence (sampled rows >> sampled keys) and must respect
-    the winners bound; this batch falls back to shuffled argmax."""
-    from radiant_portal_pipeline_spark.cdc import schemas as S
-
-    # one conversation, 30k rows, every (conv, turn) key unique, plus a
-    # sprinkle of genuine duplicates elsewhere so total_dups > 0
-    mega = [("conv-mega", i, "user", f"m{i}", None, None, "U", i, 0)
-            for i in range(30_000)]
-    dups = [(f"c{i % 50}", 0, "user", f"d{i}", None, None, "U", 30_000 + i, 0)
-            for i in range(2_000)]
-    batch = spark.createDataFrame(mega + dups, S.CHANGE_EVENT_SCHEMA)
-    tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=8)
-    eng = TranscriptMergeEngine(
-        tbl, num_buckets=8, merge_plan="adaptive", broadcast_max_winners=5_000,
-        dup_share_threshold=0.01,
-    )
-    st = eng.merge_batch(batch, epoch=0)
-    assert st.plan == "argmax", st.plan  # NOT hot_split, NOT broadcast
-
-
-def test_hot_split_lineage_counts_are_per_key(spark, tmp_path):
-    """Round-5 review: hot_split writes a raw tail, so lineage I/U/D
-    counts must come from the folded slim projection (same contract as
-    append_only) — a tail key updated twice in the batch counts once."""
-    from radiant_portal_pipeline_spark.cdc import schemas as S
-    from radiant_portal_pipeline_spark.cdc.lineage import LineageWriter
-
-    # hot conv: 2000 rows on 10 keys; tail: 400 keys, each key TWICE
-    rows = [("conv-hot", i % 10, "user", f"h{i}", None, None, "U", i, 0)
-            for i in range(2_000)]
-    rows += [(f"c{i % 400}", 99, "user", f"t{i}", None, None, "U", 2_000 + i, 0)
-             for i in range(800)]
-    batch = spark.createDataFrame(rows, S.CHANGE_EVENT_SCHEMA)
-    tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=4)
-    lineage = LineageWriter(spark, str(tmp_path / "lin"))
-    eng = TranscriptMergeEngine(
-        tbl, num_buckets=4, merge_plan="hot_split", lineage=lineage,
-    )
-    st = eng.merge_batch(batch, epoch=0)
-    assert st.plan == "hot_split"
-    rec = lineage.read().agg(
-        F.sum("rows_inserted").alias("ins"),
-        F.sum("rows_updated").alias("upd"),
-        F.sum("rows_deleted").alias("del_"),
-    ).head()
-    # per-KEY counts: 10 hot keys + 400 tail keys, all inserts into an
-    # empty table
-    assert rec["ins"] == 410, rec
-    assert (rec["upd"] or 0) == 0 and (rec["del_"] or 0) == 0, rec
-
-
-def test_hot_split_sticky_reuses_conv_list_and_stays_correct(spark, tmp_path):
-    """Sticky hot_split (estimate_every>1) replays both the plan AND
-    the probed conversation list; results must stay equal to a fresh
-    per-batch estimate (stale heavy lists are correct-by-construction:
-    unlisted heavy convs just append raw under MoR)."""
-    from pyspark.sql import functions as F
-
-    from radiant_portal_pipeline_spark.cdc.feed import synthetic_feed
-
-    feed = synthetic_feed(
-        spark, 40_000, n_convs=12_007, dup_frac=0.03, hot_every=5
-    ).localCheckpoint(eager=True)
-
-    def replay(name, **kw):
-        tbl = TranscriptMergeEngine.create_table(
-            spark, str(tmp_path / name), num_buckets=8
-        )
-        eng = TranscriptMergeEngine(
-            tbl, num_buckets=8, merge_plan="adaptive",
-            broadcast_max_winners=15_000, dup_share_threshold=0.01, **kw
-        )
-        stats = []
-        for e in range(2):
-            stats.append(
-                eng.merge_batch(feed.filter(F.col("commit_epoch") % 2 == e), epoch=e)
-            )
-        return eng, stats
-
-    fresh, fresh_stats = replay("fresh")
-    sticky, sticky_stats = replay("sticky", estimate_every=4)
-    assert all(s.plan == "hot_split" for s in fresh_stats + sticky_stats), (
-        [s.plan for s in fresh_stats + sticky_stats]
-    )
-    want = sorted(map(tuple, fresh.current_state().collect()))
-    assert sorted(map(tuple, sticky.current_state().collect())) == want
-    assert len(want) > 0
-
-
-def test_source_bucketed_elides_layout_exchange_and_stays_equal(spark, tmp_path):
-    """A feed KEYED BY CONVERSATION (Kafka-style): declaring
-    source_bucketed=True elides the layout repartition. Results must
-    equal the default path for every elision-eligible plan, files stay
-    one-per-bucket when the declaration is true, and a FALSE
-    declaration degrades to small files, never wrong data."""
-    from pyspark.sql import functions as F
-
-    from radiant_portal_pipeline_spark.cdc.feed import synthetic_feed
-    from radiant_portal_pipeline_spark.cdc.merge import part_expr
-
-    feed = synthetic_feed(spark, 30_000, n_convs=97, dup_frac=0.05)
-    # model the keyed source: partitions clustered by the bucket hash
-    keyed = feed.repartition(8, part_expr("conv_id", 8)).localCheckpoint(
-        eager=True
-    )
-
-    def replay(plan, name, source_bucketed, batch):
-        tbl = TranscriptMergeEngine.create_table(
-            spark, str(tmp_path / name), num_buckets=8
-        )
-        eng = TranscriptMergeEngine(tbl, num_buckets=8, merge_plan=plan)
-        eng.merge_batch(batch, epoch=0, source_bucketed=source_bucketed)
-        return eng
-
-    base = replay("argmax_broadcast", "base", False, keyed)
-    want = sorted(map(tuple, base.current_state().collect()))
-    # hot_split included: its bespoke bucketed branch (winners-side
-    # repartition + raw-tail union) must also be clustering-preserving
-    # and result-equal (round-5 review #4). The 20%-hot feed triggers
-    # the static probe (conv-hot carries ~6k of 30k rows).
-    for plan in ("argmax_broadcast", "append_only", "hot_split"):
-        eng = replay(plan, f"sb_{plan}", True, keyed)
-        assert sorted(map(tuple, eng.current_state().collect())) == want
-        files = eng.table.snapshot().files
-        assert max(len(fs) for fs in files.values()) <= 2, {
-            p: len(fs) for p, fs in files.items()
-        }
-
-    # FALSE declaration (unclustered batch): data still correct
-    lying = replay("append_only", "lying", True, feed.localCheckpoint(eager=True))
-    assert sorted(map(tuple, lying.current_state().collect())) == want
-
-    # CoW refuses the declaration
-    tbl = TranscriptMergeEngine.create_table(
-        spark, str(tmp_path / "cow"), num_buckets=8
-    )
-    eng = TranscriptMergeEngine(tbl, num_buckets=8, mode="cow")
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="MoR"):
-        eng.merge_batch(keyed, epoch=0, source_bucketed=True)
 
 
 def test_compact_broadcast_upgrade_gated_by_fold_size(spark, tmp_path):

@@ -8,6 +8,7 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
 
 from radiant_portal_pipeline_spark.cdc.feed import synthetic_feed
@@ -56,40 +57,6 @@ def _bare_engine(merge_plan: str):
     eng.lsn_col = "lsn"
     eng.merge_plan = merge_plan
     return eng
-
-
-def test_merge_prepare_two_phase_keeps_partial_aggregation(spark):
-    """The default plan must NOT let the layout repartition swallow the
-    aggregation's own exchange: the LWW groupBy keys its exchange on the
-    FULL (part, conv_id, turn_idx) with a partial aggregate BELOW it
-    (map-side combine = the skew defense), and only the deduped output
-    is repartitioned by bucket."""
-    feed = synthetic_feed(spark, 1000)
-    plan = plan_of(
-        TranscriptMergeEngine._prepare_batch(_bare_engine("two_phase"), feed)[0],
-        mode="simple",
-    )
-    assert plan.count("Exchange") == 2, plan
-    first, rest = plan.split("Exchange", 2)[1], plan.split("Exchange", 2)[2]
-    # topmost exchange: layout by bucket only (post-dedup rows)
-    assert "conv_id" not in first.splitlines()[0], plan
-    # deeper exchange: the aggregation's, keyed on the full group key,
-    # with a partial aggregate BELOW it (closer to the scan)
-    agg_exchange_line = rest.splitlines()[0]
-    assert "conv_id" in agg_exchange_line and "turn_idx" in agg_exchange_line, plan
-    assert "Aggregate" in rest, plan  # partial agg below the exchange
-
-
-def test_merge_prepare_single_exchange_variant(spark):
-    """The low-duplication profile: one exchange, aggregation reuses it
-    (subset-clustering rule)."""
-    feed = synthetic_feed(spark, 1000)
-    plan = plan_of(
-        TranscriptMergeEngine._prepare_batch(_bare_engine("single_exchange"), feed)[0],
-        mode="simple",
-    )
-    assert plan.count("Exchange") == 1, plan
-    assert plan.count("Aggregate") >= 2
 
 
 def test_top1_window_vs_agg_same_result_different_plan(spark, sf_smoke):
@@ -266,16 +233,18 @@ def _slim_for_chooser(eng, feed):
 
 def _with_map_payload(feed):
     """An argmax-INeligible batch: map-typed payload columns can't be
-    grouping keys for the distinct, so adaptive must fall back to the
-    sampling chooser over the max-struct topologies."""
+    grouping keys for the distinct, so adaptive must take the fallback
+    plan."""
     return feed.withColumn(
         "attrs", F.create_map(F.lit("k"), F.col("role"))
     )
 
 
 def test_adaptive_fallback_chooser_on_ineligible_schema(spark, tmp_path):
+    """Argmax-ineligible batches resolve to the one fixed fallback
+    label, whatever their skew, with no estimator job."""
     from radiant_portal_pipeline_spark.cdc import schemas as S
-    from radiant_portal_pipeline_spark.cdc.merge import part_expr
+    from radiant_portal_pipeline_spark.cdc.merge import FALLBACK_PLAN, part_expr
 
     p = spark.sparkContext.defaultParallelism
     buckets = max(64, 2 * p)
@@ -291,33 +260,11 @@ def test_adaptive_fallback_chooser_on_ineligible_schema(spark, tmp_path):
 
     hot = slim(synthetic_feed(spark, 30_000, hot_every=2))  # 50% to one conv
     plan, reason = eng._choose_plan(hot)
-    assert plan == "two_phase", (plan, reason)
+    assert (plan, reason) == (FALLBACK_PLAN, "argmax_ineligible")
 
     uniform = slim(synthetic_feed(spark, 30_000, n_convs=5000, hot_every=10**9))
     plan, reason = eng._choose_plan(uniform)
-    assert plan == "single_exchange", (plan, reason)
-
-
-def test_adaptive_caps_below_parallelism_stays_two_phase(spark, tmp_path):
-    """buckets < cluster parallelism would cap the single-exchange
-    aggregation — the fallback chooser must refuse it regardless of
-    skew (argmax-ineligible schema forces the fallback path)."""
-    from radiant_portal_pipeline_spark.cdc import schemas as S
-    from radiant_portal_pipeline_spark.cdc.merge import part_expr
-
-    p = spark.sparkContext.defaultParallelism
-    if p < 2:
-        return
-    buckets = max(2, p // 2)
-    tbl = TranscriptMergeEngine.create_table(
-        spark, str(tmp_path / "t2"), num_buckets=buckets
-    )
-    eng = TranscriptMergeEngine(tbl)
-    df = _with_map_payload(
-        synthetic_feed(spark, 5_000, n_convs=5000, hot_every=10**9)
-    ).withColumn(S.PART_COL, part_expr("conv_id", buckets))
-    plan, _ = eng._choose_plan(df)
-    assert plan == "two_phase"
+    assert (plan, reason) == (FALLBACK_PLAN, "argmax_ineligible")
 
 
 def test_merge_prepare_argmax_broadcast_zero_fullrow_exchanges(spark):
@@ -376,10 +323,12 @@ def test_range_bin_join_shuffles_on_key_and_bin(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
 
 
-def test_range_bin_join_guards_runaway_spans(spark):
-    import pytest
-
-    from radiant_portal_pipeline_spark.operators.range_bin import range_bin_join
+@pytest.mark.parametrize("variant", ["join", "overlap"])
+def test_range_bin_join_guards_runaway_spans(spark, variant):
+    from radiant_portal_pipeline_spark.operators.range_bin import (
+        range_bin_join,
+        range_bin_overlap_join,
+    )
 
     pts = spark.range(10).select(
         F.lit(1).alias("k"), (F.col("id") * 1.0).alias("pos")
@@ -387,9 +336,17 @@ def test_range_bin_join_guards_runaway_spans(spark):
     ivs = spark.range(1).select(
         F.lit(1).alias("k"), F.lit(0.0).alias("lo"), F.lit(1e9).alias("hi")
     )
+    joins = {
+        "join": lambda: range_bin_join(
+            pts, ivs, ["k"], "pos", "lo", "hi", 1.0, max_bins_per_interval=100
+        ),
+        "overlap": lambda: range_bin_overlap_join(
+            pts.withColumn("pos_hi", F.col("pos")), ivs, ["k"],
+            "pos", "pos_hi", "lo", "hi", 1.0, max_bins_per_interval=100,
+        ),
+    }
     with pytest.raises(Exception, match="bins"):
-        range_bin_join(pts, ivs, ["k"], "pos", "lo", "hi", 1.0,
-                       max_bins_per_interval=100).collect()
+        joins[variant]().collect()
 
 
 def test_range_bin_overlap_join_canonical_bin_exactly_once(spark):
