@@ -12,9 +12,14 @@ Row-count semantics per (batch, bucket):
 - ``rows_updated``   — keys whose winner changed to a batch row
 - ``rows_deleted``   — keys tombstoned by the batch
 In MoR the pre-image isn't read on the write path (that's the point),
-so the split comes from a manifest-pruned anti-join of the batch's keys
-against the PRIOR snapshot of only the touched buckets — still
-partition-pruned, still no full-table scan.
+so the split comes after the commit: the batch's committed rows and the
+keys of the PRIOR snapshot's touched buckets (partition-pruned, no
+full-table scan) are unioned and shuffled once by bucket, then counted
+per key and per bucket.
+
+A fresh lineage table is partitioned by ``batch_id``, so each applied
+batch lands as ONE file. Tables created with ``part_bucket``
+partitioning keep that layout; the same append serves both.
 """
 
 from __future__ import annotations
@@ -52,7 +57,7 @@ class LineageWriter:
         if LakeTable.exists(path):
             self.table = LakeTable(spark, path)
         else:
-            self.table = LakeTable.create(spark, path, LINEAGE_SCHEMA, "part_bucket")
+            self.table = LakeTable.create(spark, path, LINEAGE_SCHEMA, "batch_id")
         self.spark = spark
 
     def record(
@@ -70,40 +75,56 @@ class LineageWriter:
     ) -> None:
         """Append watermarks + I/U/D counts for the touched partitions.
 
-        ``prepared_batch`` is the LWW-deduped batch (with part +
-        tombstone columns); the pre-image for the I/U split is the
-        sink's PRIOR snapshot version, read partition-pruned."""
+        ``prepared_batch`` holds the batch's rows as committed (part,
+        key, lsn and tombstone columns); several rows of one key — an
+        un-deduped ``append_only`` commit — fold LWW to one. The
+        pre-image is the sink's PRIOR snapshot version of the touched
+        buckets. One exchange: both sides are repartitioned by bucket,
+        the per-key and per-bucket aggregations reuse that partitioning,
+        and the single output partition is written as one append."""
         if not parts:
             return
-        # distinct: a MoR snapshot can hold multiple versions per key
-        pre = (
-            sink.read(partitions=parts, version=prior_version)
-            .select(*key_cols)
-            .distinct()
-            .withColumn("_existed", F.lit(True))
+        keys = [S.PART_COL, *key_cols]
+        new = prepared_batch.select(
+            *keys,
+            F.col(lsn_col).alias("_lsn"),
+            F.col(S.DELETED_COL).alias("_del"),
+            F.lit(False).alias("_old"),
+        )
+        # the prior snapshot may hold several versions (and tombstones)
+        # per key: any of them makes the key "existed"
+        old = sink.read(partitions=parts, version=prior_version).select(
+            *keys,
+            F.lit(None).cast("long").alias("_lsn"),
+            F.lit(None).cast("boolean").alias("_del"),
+            F.lit(True).alias("_old"),
+        )
+        per_key = (
+            new.unionByName(old)
+            .repartition(F.col(S.PART_COL))
+            .groupBy(*keys)
+            .agg(
+                F.max("_lsn").alias("_lsn"),  # NULL: key not in the batch
+                F.max_by("_del", "_lsn").alias("_del"),  # the winner's op
+                F.max("_old").alias("_existed"),
+            )
+            .filter(F.col("_lsn").isNotNull())
         )
         wm = (
-            prepared_batch.join(pre, key_cols, "left")
-            .groupBy(F.col(S.PART_COL).alias("part_bucket"))
+            per_key.groupBy(S.PART_COL)
             .agg(
-                F.max(lsn_col).alias("applied_lsn_watermark"),
-                F.sum(
-                    F.when(
-                        F.col("_existed").isNull() & ~F.col(S.DELETED_COL), 1
-                    ).otherwise(0)
-                ).alias("rows_inserted"),
-                F.sum(
-                    F.when(
-                        F.col("_existed").isNotNull() & ~F.col(S.DELETED_COL), 1
-                    ).otherwise(0)
-                ).alias("rows_updated"),
-                F.sum(F.when(F.col(S.DELETED_COL), 1).otherwise(0)).alias(
-                    "rows_deleted"
+                F.max("_lsn").alias("applied_lsn_watermark"),
+                F.sum((~F.col("_existed") & ~F.col("_del")).cast("long")).alias(
+                    "rows_inserted"
                 ),
+                F.sum((F.col("_existed") & ~F.col("_del")).cast("long")).alias(
+                    "rows_updated"
+                ),
+                F.sum(F.col("_del").cast("long")).alias("rows_deleted"),
             )
             .select(
                 F.lit(batch_id).cast("long").alias("batch_id"),
-                "part_bucket",
+                F.col(S.PART_COL).alias("part_bucket"),
                 "applied_lsn_watermark",
                 "rows_inserted",
                 "rows_updated",
@@ -113,7 +134,7 @@ class LineageWriter:
                 F.lit(source_id).alias("source_id"),
             )
         )
-        self.table.append(wm)
+        self.table.append(wm.coalesce(1), layout_ready=True)
 
     def read(self) -> DataFrame:
         return self.table.read()

@@ -46,7 +46,7 @@ Two physical strategies (same logical semantics, verified equal):
 Scale notes: the only shuffles are the LWW hash aggregation and the
 write repartition by bucket; both are keyed on the hashed conversation
 id so they stay balanced under conversation skew. Bucket count should
-scale with cluster size (64 here; thousands at 1000 executors).
+scale with cluster size (32 by default; thousands at 1000 executors).
 """
 
 from __future__ import annotations
@@ -398,12 +398,10 @@ class TranscriptMergeEngine:
         if self.quarantine is not None:
             batch = self._split_quarantine(batch, epoch)
         prepared, plan, plan_reason = self._prepare_batch(batch)
-        lineage_checkpointed = self.lineage is not None
-        if lineage_checkpointed:
-            prepared = prepared.localCheckpoint(eager=True)
 
         if self.mode == "mor":
-            # append-only write path: no existing data read or rewritten
+            # append-only write path: no existing data read or rewritten;
+            # the dedup runs once, inside this write
             result = self.table.append(
                 prepared, source_id=self.source_id, epoch=epoch, layout_ready=True
             )
@@ -416,26 +414,19 @@ class TranscriptMergeEngine:
                 seconds=time.time() - t0,
                 plan=plan,
             )
-            lineage_batch = prepared
-            if plan == "append_only" and self.lineage is not None:
-                # lineage I/U/D counts are per KEY (LineageWriter.record
-                # contract) but append_only writes the UN-deduped batch;
-                # fold a SLIM projection just for the metrics — key
-                # columns + lsn + tombstone, no payload, so the count
-                # pass stays cheap and the write path stays elided
-                lineage_batch = lww_dedup(
-                    prepared.select(
-                        S.PART_COL, *self.key_cols, self.lsn_col, S.DELETED_COL
-                    ),
-                    [S.PART_COL, *self.key_cols],
-                    [self.lsn_col],
+            if self.lineage is not None and not stats.skipped:
+                # lineage reads the commit's own delta files back, so it
+                # describes exactly the committed bytes (un-deduped under
+                # append_only; record() counts per key either way)
+                committed = self.table.read_files(
+                    self.table.last_commit_files, result.schema
                 )
-            self._record_lineage(stats, lineage_batch, snap.version, plan_reason)
+                self._record_lineage(stats, committed, snap.version, plan_reason)
             return stats
 
         # ---- copy-on-write: fused union + LWW over touched buckets
-        if not lineage_checkpointed:  # avoid materializing the batch twice
-            prepared = prepared.localCheckpoint(eager=True)
+        # (checkpointed: the bucket list, the fold and lineage all read it)
+        prepared = prepared.localCheckpoint(eager=True)
         parts = [r[0] for r in prepared.select(S.PART_COL).distinct().collect()]
         if not parts:
             result = self.table.overwrite_partitions(
@@ -516,9 +507,9 @@ class TranscriptMergeEngine:
     ):
         if self.lineage is None or stats.skipped or not stats.parts:
             return
-        # raw_state semantics need the LWW over tombstones too, so the
-        # pre-image for the insert/update split is the PRIOR snapshot
-        # folded per key (partition-pruned to the touched buckets).
+        # the pre-image for the insert/update split is the PRIOR
+        # snapshot's distinct keys, tombstones included (partition-pruned
+        # to the touched buckets).
         self.lineage.record(
             batch_id=stats.epoch,
             sink=self.table,
@@ -752,8 +743,11 @@ class TranscriptMergeEngine:
             key_cols=tuple(self.key_cols),
             lsn_col=self.lsn_col,
             mode=self.mode,
-            merge_plan=self.merge_plan,
             lineage=self.lineage,
+            merge_plan=self.merge_plan,
+            broadcast_max_winners=self.broadcast_max_winners,
+            quarantine=self.quarantine,
+            compact_broadcast_min_bytes=self.compact_broadcast_min_bytes,
         )
 
     def current_state(self, include_meta: bool = False) -> DataFrame:

@@ -448,8 +448,10 @@ class LakeTable:
         self.spark = spark
         self.path = path
         self.commit_protocol = commit_protocol or PosixCommitProtocol()
-        # partitions touched by this instance's most recent data commit
+        # partitions touched by this instance's most recent data commit,
+        # and the data files it wrote (relative paths; see read_files)
         self.last_commit_partitions: list[str] = []
+        self.last_commit_files: list[str] = []
         self._blob_cache: dict[str, dict] = {}  # manifest blobs are immutable
 
     # ------------------------------------------- split-manifest blobs
@@ -563,11 +565,15 @@ class LakeTable:
         lsn/ts-range read (reference: min/max scan pruning over Iceberg
         column metrics, SURVEY.md X8/X12)."""
         snap = self.snapshot(version)
-        rel = self._select_files(snap, partitions, skip)
-        if not rel:
-            return self.spark.createDataFrame([], snap.schema)
-        paths = [os.path.join(self.path, f) for f in rel]
-        return self.spark.read.schema(snap.schema).parquet(*paths)
+        return self.read_files(self._select_files(snap, partitions, skip), snap.schema)
+
+    def read_files(self, files: list[str], schema: T.StructType) -> DataFrame:
+        """Scan exactly ``files`` (paths relative to the table root, e.g.
+        ``last_commit_files``) under ``schema``."""
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        paths = [os.path.join(self.path, f) for f in files]
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def _select_files(
         self,
@@ -828,6 +834,7 @@ class LakeTable:
 
         out = self._commit(mutate, source_id=source_id, epoch=epoch)
         self.last_commit_partitions = sorted(new_files.keys())
+        self.last_commit_files = sorted(f for fs in new_files.values() for f in fs)
         return out
 
     def overwrite_partitions(
@@ -929,6 +936,7 @@ class LakeTable:
 
         out = self._commit(mutate, source_id=source_id, epoch=epoch)
         self.last_commit_partitions = sorted(replaced)
+        self.last_commit_files = sorted(f for fs in new_files.values() for f in fs)
         return out
 
     def rewrite_files(
@@ -1033,7 +1041,8 @@ class LakeTable:
 
         out = self._commit(mutate)
         assert out is not None
-        # deliberately does NOT touch self.last_commit_partitions:
+        # deliberately does NOT touch self.last_commit_partitions (nor
+        # last_commit_files):
         # rewrite_files is designed to run CONCURRENTLY with an ingest
         # thread on the same handle (compact(concurrent_safe=True)),
         # and merge_batch reads last_commit_partitions right after its

@@ -648,15 +648,20 @@ def test_s3_publish_412_get_retries_transport_errors():
 
 
 def test_rewrite_files_does_not_clobber_last_commit_partitions(spark, tmp_path):
-    """merge_batch reads table.last_commit_partitions right after its
-    append; a concurrent rewrite_files must not overwrite it."""
+    """merge_batch reads table.last_commit_partitions and
+    last_commit_files right after its append; a concurrent
+    rewrite_files must not overwrite either."""
     path = str(tmp_path / "t")
     tbl = LakeTable.create(spark, path, SCHEMA, "part")
     tbl.append(spark.createDataFrame([("a", 1, 0), ("b", 2, 1)], SCHEMA))
     marker = list(tbl.last_commit_partitions)
     base_files = {p: list(fs) for p, fs in tbl.snapshot().files.items()}
+    # the commit-files record names exactly the files the append wrote
+    marker_files = list(tbl.last_commit_files)
+    assert marker_files == sorted(f for fs in base_files.values() for f in fs)
     tbl.rewrite_files(
         spark.createDataFrame([("a", 1, 0), ("b", 2, 1)], SCHEMA),
         replace=base_files,
     )
     assert tbl.last_commit_partitions == marker
+    assert tbl.last_commit_files == marker_files

@@ -382,6 +382,35 @@ def test_rescale_abort_is_self_cleaning(spark, tmp_path):
         eng.rescale(target, new_buckets=16)
 
 
+def test_rescale_carries_engine_settings(spark, tmp_path):
+    """The rescaled engine keeps every engine setting: a pinned
+    broadcast bound stays pinned, and a batch with a NULL key still
+    goes to the dead-letter table instead of failing."""
+    tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=4)
+    q = TranscriptMergeEngine.create_quarantine_table(spark, str(tmp_path / "q"))
+    eng = TranscriptMergeEngine(
+        tbl,
+        quarantine=q,
+        broadcast_max_winners=0,
+        compact_broadcast_min_bytes=1,
+    )
+    eng.merge_batch(_batch(spark, [_ev("c1", 0, "U", 1, "a")]), epoch=0)
+
+    eng8 = eng.rescale(str(tmp_path / "t8"), new_buckets=8)
+    assert eng8.num_buckets == 8
+    assert eng8.broadcast_max_winners == 0
+    assert eng8.compact_broadcast_min_bytes == 1
+    assert eng8.quarantine is q
+    batch = _batch(
+        spark, [_ev("c2", 0, "U", 2, "good"), _ev("c3", 0, "U", 3, "bad-key")]
+    ).withColumn("conv_id", F.when(F.col("text") != "bad-key", F.col("conv_id")))
+    assert not eng8.merge_batch(batch, epoch=1).skipped
+    assert {r["conv_id"] for r in eng8.current_state().collect()} == {"c1", "c2"}
+    assert {(r["_reason"], r["text"]) for r in q.read().collect()} == {
+        ("null_merge_key", "bad-key")
+    }
+
+
 def test_legacy_plans_execute_on_map_payload(spark, tmp_path):
     """A map payload makes a batch argmax-ineligible (maps can't be
     grouping keys or be ordered inside a max-struct). Such batches
@@ -494,8 +523,8 @@ def test_append_only_rejected_for_cow(spark, tmp_path):
 
 def test_append_only_lineage_counts_per_key(spark, tmp_path):
     """Lineage I/U/D counts are per KEY even when the write path
-    elides dedup (append_only writes raw rows; the metrics fold a slim
-    projection — round-3 review finding)."""
+    elides dedup (append_only writes raw rows; lineage folds the
+    committed rows per key — round-3 review finding)."""
     from radiant_portal_pipeline_spark.cdc.lineage import LineageWriter
 
     tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=4)

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from radiant_portal_pipeline_spark.cdc import TranscriptMergeEngine
@@ -81,8 +82,10 @@ def test_stream_end_to_end_with_resume(spark, tmp_path, sf_smoke):
     assert totals > 0
 
 
-def test_lineage_iud_counts_exact(spark, tmp_path):
-    """Precise I/U/D accounting per batch (FIXTURES F4)."""
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_lineage_iud_counts_exact(spark, tmp_path, mode):
+    """Precise I/U/D accounting per batch (FIXTURES F4), in both merge
+    modes."""
     import datetime as dt
 
     from radiant_portal_pipeline_spark.cdc import TranscriptMergeEngine
@@ -96,7 +99,7 @@ def test_lineage_iud_counts_exact(spark, tmp_path):
 
     tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=4)
     lineage = LineageWriter(spark, str(tmp_path / "lin"))
-    eng = TranscriptMergeEngine(tbl, lineage=lineage)
+    eng = TranscriptMergeEngine(tbl, mode=mode, lineage=lineage)
 
     b0 = spark.createDataFrame(
         [ev("c1", 0, "I", 1), ev("c2", 0, "I", 2), ev("c3", 0, "D", 3)],
@@ -124,6 +127,79 @@ def test_lineage_iud_counts_exact(spark, tmp_path):
     assert agg[0] == (2, 0, 1)
     # batch 1: c1 update (existed), c4 insert (new), c2 delete
     assert agg[1] == (1, 1, 1)
+
+
+@pytest.mark.parametrize("plan", ["argmax_broadcast", "append_only"])
+def test_lineage_describes_committed_bytes(spark, tmp_path, plan):
+    """A non-deterministic batch (every evaluation keeps a different
+    random subset) must be counted as COMMITTED: the batch's lineage
+    I+U+D equals the number of keys in the files that batch wrote.
+    Recomputing the batch for lineage would count another subset."""
+    import os
+    import random
+
+    from radiant_portal_pipeline_spark.cdc.feed import synthetic_feed
+
+    keep = F.udf(lambda: random.random() < 0.5, "boolean").asNondeterministic()
+    feed = synthetic_feed(spark, 4000, n_convs=97, dup_frac=0.05)
+    tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=4)
+    lineage = LineageWriter(spark, str(tmp_path / "lin"))
+    eng = TranscriptMergeEngine(tbl, merge_plan=plan, lineage=lineage)
+    for epoch in range(2):
+        before = set(tbl.live_files())
+        eng.merge_batch(feed.filter(F.col("commit_epoch") == epoch).filter(keep()), epoch)
+        written = sorted(set(tbl.live_files()) - before)
+        keys = (
+            spark.read.schema(tbl.snapshot().schema)
+            .parquet(*[os.path.join(tbl.path, f) for f in written])
+            .select("conv_id", "turn_idx")
+            .distinct()
+            .count()
+        )
+        row = (
+            lineage.read()
+            .filter(F.col("batch_id") == epoch)
+            .agg(F.sum(F.col("rows_inserted") + F.col("rows_updated") + F.col("rows_deleted")))
+            .head()
+        )
+        assert keys > 0 and row[0] == keys, (epoch, row[0], keys)
+
+
+def test_lineage_layout_one_file_per_batch(spark, tmp_path):
+    """A fresh lineage table writes ONE data file per applied batch; a
+    table created with the older part_bucket partitioning still takes
+    record() through the same append and holds the same rows."""
+    from radiant_portal_pipeline_spark.cdc.feed import synthetic_feed
+    from radiant_portal_pipeline_spark.cdc.lineage import LINEAGE_SCHEMA
+
+    feed = synthetic_feed(spark, 6000, n_convs=97, dup_frac=0.05).localCheckpoint(
+        eager=True
+    )
+    LakeTable.create(spark, str(tmp_path / "lin_bucket"), LINEAGE_SCHEMA, "part_bucket")
+    writers = {}
+    for name in ("lin_batch", "lin_bucket"):
+        tbl = TranscriptMergeEngine.create_table(
+            spark, str(tmp_path / f"t_{name}"), num_buckets=4
+        )
+        writers[name] = LineageWriter(spark, str(tmp_path / name))
+        eng = TranscriptMergeEngine(tbl, lineage=writers[name])
+        for epoch in range(3):
+            st = eng.merge_batch(feed.filter(F.col("commit_epoch") == epoch), epoch)
+            assert st.parts_touched == 4
+    fresh, legacy = writers["lin_batch"].table, writers["lin_bucket"].table
+    assert fresh.snapshot().partition_col == "batch_id"
+    assert sorted(fresh.partitions()) == ["0", "1", "2"]
+    assert len(fresh.live_files()) == 3
+    assert legacy.snapshot().partition_col == "part_bucket"
+    assert sorted(legacy.partitions()) == ["0", "1", "2", "3"]
+    cols = ["batch_id", "part_bucket", "applied_lsn_watermark",
+            "rows_inserted", "rows_updated", "rows_deleted"]
+    rows = {
+        name: sorted(map(tuple, w.read().select(cols).collect()))
+        for name, w in writers.items()
+    }
+    assert len(rows["lin_batch"]) == 12
+    assert rows["lin_bucket"] == rows["lin_batch"]
 
 
 def test_feed_files_mtime_ordered_by_epoch(spark, tmp_path):
