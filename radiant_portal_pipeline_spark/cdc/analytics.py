@@ -67,14 +67,8 @@ class ConversationStats:
         rows — the reference's 'recompute only the touched part'."""
         if parts is not None and not parts:
             return
-        eng = self.engine
-        state = eng.table.read(partitions=parts)
-        if eng.mode == "mor":
-            from radiant_portal_pipeline_spark.cdc.dedup import lww_dedup
-
-            state = lww_dedup(state, eng.key_cols, [eng.lsn_col])
-        live = state.filter(~F.col(S.DELETED_COL))
-        agg = self._aggregate(live)
+        state = self.engine.raw_state(partitions=parts)
+        agg = self._aggregate(state.filter(~F.col(S.DELETED_COL)))
         self.table.overwrite_partitions(
             agg, also_replace=list(parts) if parts is not None else self.table.partitions()
         )

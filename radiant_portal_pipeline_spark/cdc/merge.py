@@ -155,15 +155,10 @@ class TranscriptMergeEngine:
             S.sink_schema(),
             partition_col=S.PART_COL,
             # manifest min/max stats for the scan-pruning columns (an
-            # lsn/ts/turn-range read opens only intersecting files) +
-            # split manifests (per-bucket content-addressed blobs:
-            # commits rewrite O(touched buckets) manifest bytes, pruned
-            # reads load only their buckets' manifests — the layout
-            # that survives 10^6 files)
+            # lsn/ts/turn-range read opens only intersecting files)
             properties={
                 "num_buckets": num_buckets,
                 "stats_cols": [S.LSN_COL, "turn_idx", "ts"],
-                "manifest_split": True,
             },
         )
 
@@ -548,11 +543,7 @@ class TranscriptMergeEngine:
         rows: on a compacted 10^10-row table this opens only the tail
         of each bucket, not every file (SURVEY.md #2 'what's missing'
         round-1 item)."""
-        pruned = self.table.read(skip={self.lsn_col: (lsn_exclusive + 1, None)})
-        df = pruned.filter(F.col(self.lsn_col) > lsn_exclusive)
-        if self.mode == "mor":
-            df = lww_dedup(df, self.key_cols, [self.lsn_col])
-        return df
+        return self.raw_state(since_lsn=lsn_exclusive)
 
     def compact(
         self,
@@ -720,10 +711,7 @@ class TranscriptMergeEngine:
         new_tbl = TranscriptMergeEngine.create_table(
             spark, new_path, num_buckets=new_buckets
         )
-        df = self.table.read(version=snap0.version)
-        if self.mode == "mor":
-            df = lww_dedup(df, self.key_cols, [self.lsn_col])
-        folded = df.drop(S.PART_COL)
+        folded = self.raw_state(version=snap0.version).drop(S.PART_COL)
         relaid = folded.withColumn(
             S.PART_COL, part_expr(self.key_cols[0], new_buckets)
         ).repartition(new_buckets, F.col(S.PART_COL))
@@ -751,17 +739,27 @@ class TranscriptMergeEngine:
         )
 
     def current_state(self, include_meta: bool = False) -> DataFrame:
-        df = self.table.read()
-        if self.mode == "mor":
-            df = lww_dedup(df, self.key_cols, [self.lsn_col])
-        df = df.filter(~F.col(S.DELETED_COL))
+        df = self.raw_state().filter(~F.col(S.DELETED_COL))
         if include_meta:
             return df
         return df.drop(S.DELETED_COL, S.PART_COL)
 
-    def raw_state(self) -> DataFrame:
-        """Post-LWW rows INCLUDING tombstones (lineage/debug view)."""
-        df = self.table.read()
+    def raw_state(
+        self,
+        partitions: list | None = None,
+        version: int | None = None,
+        since_lsn: int | None = None,
+    ) -> DataFrame:
+        """Post-LWW rows INCLUDING tombstones — the one MoR state read
+        every state view goes through. ``partitions`` / ``version``
+        prune and pin the scan like ``LakeTable.read``; ``since_lsn``
+        skips files by their manifest lsn range and keeps only rows with
+        lsn > ``since_lsn`` BEFORE the LWW (so a key's winner is its
+        newest change after the watermark)."""
+        skip = None if since_lsn is None else {self.lsn_col: (since_lsn + 1, None)}
+        df = self.table.read(partitions=partitions, version=version, skip=skip)
+        if since_lsn is not None:
+            df = df.filter(F.col(self.lsn_col) > since_lsn)
         if self.mode == "mor":
             df = lww_dedup(df, self.key_cols, [self.lsn_col])
         return df

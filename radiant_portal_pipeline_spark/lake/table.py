@@ -4,12 +4,11 @@ The image has no Iceberg/Delta runtime jar, so the engine ships its own
 minimal table format with the same *semantics* the reference relies on:
 
 - snapshot isolation via an append-only log of immutable version files
-  (``_log/v%012d.json``) — no log replay. Two manifest layouts: FULL
-  inline snapshot (default; fine to ~10^5 file entries) or the
-  Iceberg-style **manifest-list split** (``manifest_split`` property):
-  per-partition content-addressed blobs under ``_log/manifests/``, so
-  a commit rewrites O(touched partitions) manifest bytes and a pruned
-  read loads only its partitions' blobs (see Snapshot docstring);
+  (``_log/v%012d.json``) — no log replay. Each version is an
+  Iceberg-style manifest list: per-partition content-addressed blobs
+  under ``_log/manifests/``, so a commit rewrites O(touched partitions)
+  manifest bytes and a pruned read loads only its partitions' blobs
+  (see Snapshot docstring);
 - atomic commits through a pluggable ``CommitProtocol`` (create-if-
   absent of the next version file; POSIX ``O_CREAT|O_EXCL`` default,
   object-store variants documented on the class); losers re-read the
@@ -33,10 +32,9 @@ minimal table format with the same *semantics* the reference relies on:
 Scale notes (100 TB / 1000 executors):
 - Data files are written by Spark executors in parallel
   (``partitionBy`` layout); only the manifest swap is driver-side.
-- The inline manifest holds ~10^5 file entries comfortably; the split
-  layout (used by the CDC sink) scales past that: manifest write cost
-  per commit is O(touched partitions), read cost follows pruning, and
-  compaction bounds files/bucket so each blob stays small.
+- Manifest write cost per commit is O(touched partitions), read cost
+  follows pruning, and compaction bounds files/bucket so each blob
+  stays small.
 - Partition values are hash buckets of the merge key, so commit
   conflicts between writers of disjoint buckets rebase cleanly.
 """
@@ -311,23 +309,31 @@ def _versions(path: str, protocol: "CommitProtocol | None" = None) -> list[int]:
     return sorted(out)
 
 
-class Snapshot:
-    """A table version. Two serialized layouts:
+def _encode_blob(content: dict) -> tuple[str, bytes]:
+    """(content-hash name, bytes) of a manifest blob: same content →
+    same name, so an untouched partition is never rewritten."""
+    import hashlib
 
-    - **inline** (default): the version file carries the full
-      ``{partition -> file list}`` and per-file stats. Simple, one
-      read per snapshot; rewritten whole per commit — fine to ~10^5
-      file entries.
-    - **split** (``properties["manifest_split"] = true`` — Iceberg's
-      manifest-list): the version file carries only
-      ``refs: {partition -> content-hash}`` pointing at immutable
-      per-partition manifest blobs under ``_log/manifests/``. A commit
-      writes blobs ONLY for partitions it touched (unchanged
-      partitions keep their hash — same content, same name, no write),
-      so commit cost is O(touched), not O(table); a partition-pruned
-      read loads only the requested partitions' blobs. ``files`` /
-      ``stats`` materialize lazily (and fully) for consumers that want
-      the whole map — the commit and pruned-read paths never do.
+    data = json.dumps(content, sort_keys=True).encode()
+    return f"m-{hashlib.sha1(data).hexdigest()}.json", data
+
+
+class Snapshot:
+    """A table version. The version file carries only
+    ``refs: {partition -> blob name}`` (Iceberg's manifest list),
+    pointing at immutable per-partition manifest blobs
+    ``{"files": [...], "stats": {...}}`` under ``_log/manifests/``
+    named by content hash. A commit writes blobs ONLY for partitions it
+    touched (unchanged partitions keep their hash — same content, same
+    name, no write), so commit cost is O(touched), not O(table); a
+    partition-pruned read loads only the requested partitions' blobs.
+    ``files`` / ``stats`` materialize lazily (and fully) for consumers
+    that want the whole map — the commit and pruned-read paths never do.
+
+    Version files written by earlier releases carry the whole inline
+    ``files``/``stats`` maps instead; ``from_json`` turns them into refs
+    whose blobs are held in ``pending`` until the next commit publishes
+    them.
     """
 
     def __init__(
@@ -335,35 +341,37 @@ class Snapshot:
         version: int,
         schema: T.StructType,
         partition_col: str,
-        files: dict[str, list[str]] | None = None,
+        refs: dict[str, str],
         applied: dict[str, int] | None = None,
         properties: dict[str, Any] | None = None,
-        stats: dict[str, dict[str, Any]] | None = None,
-        refs: dict[str, str] | None = None,
         blob_loader=None,
+        pending: dict[str, dict] | None = None,
     ):
         self.version = version
         self.schema = schema
         self.partition_col = partition_col
         self.applied = applied or {}
         self.properties = properties or {}
-        self.refs = refs  # split mode iff not None
+        self.refs = refs
         self._blob_loader = blob_loader  # name -> {"files": [...], "stats": {...}}
-        self._files = files
-        self._stats = stats
-        if refs is None:
-            self._files = files or {}
-            self._stats = stats or {}
+        # blobs named by refs but not yet published (legacy inline read)
+        self.pending = pending or {}
+        self._files: dict[str, list[str]] | None = None
+        self._stats: dict[str, dict[str, Any]] | None = None
 
-    # --- lazy full materialization (split mode only pays when asked)
+    def _blob(self, name: str) -> dict:
+        blob = self.pending.get(name)
+        return blob if blob is not None else self._blob_loader(name)
+
+    # --- lazy full materialization
 
     def _materialize(self) -> None:
         if self._files is not None:
             return
         files: dict[str, list[str]] = {}
         stats: dict[str, dict[str, Any]] = {}
-        for pv, name in (self.refs or {}).items():
-            blob = self._blob_loader(name)
+        for pv, name in self.refs.items():
+            blob = self._blob(name)
             files[pv] = list(blob["files"])
             stats.update(blob.get("stats", {}))
         self._files, self._stats = files, stats
@@ -386,49 +394,52 @@ class Snapshot:
         return self._stats
 
     def part_entry(self, pv: str) -> tuple[list[str], dict[str, dict[str, Any]]]:
-        """(files, stats) of ONE partition — in split mode this loads
-        only that partition's blob."""
-        if self.refs is not None and self._files is None:
-            name = self.refs.get(pv)
-            if name is None:
-                return [], {}
-            blob = self._blob_loader(name)
-            return list(blob["files"]), dict(blob.get("stats", {}))
-        return list(self.files.get(pv, [])), {
-            f: self.stats[f] for f in self.files.get(pv, []) if f in self.stats
-        }
+        """(files, stats) of ONE partition — loads only that partition's
+        blob."""
+        name = self.refs.get(pv)
+        if name is None:
+            return [], {}
+        blob = self._blob(name)
+        return list(blob["files"]), dict(blob.get("stats", {}))
 
     def partition_values(self) -> list[str]:
-        return sorted(self.refs.keys() if self.refs is not None else self.files.keys())
+        return sorted(self.refs)
 
     def to_json(self) -> str:
-        d = {
-            "version": self.version,
-            "schema": self.schema.json(),
-            "partition_col": self.partition_col,
-            "applied": self.applied,
-            "properties": self.properties,
-        }
-        if self.refs is not None:
-            d["refs"] = self.refs
-        else:
-            d["files"] = self._files
-            d["stats"] = self._stats
-        return json.dumps(d)
+        return json.dumps(
+            {
+                "version": self.version,
+                "schema": self.schema.json(),
+                "partition_col": self.partition_col,
+                "applied": self.applied,
+                "properties": self.properties,
+                "refs": self.refs,
+            }
+        )
 
     @staticmethod
     def from_json(raw: str, blob_loader=None) -> "Snapshot":
         d = json.loads(raw)
+        refs, pending = d.get("refs"), {}
+        if refs is None:
+            # legacy inline layout: name each partition's blob exactly
+            # as _write_blob would and keep it in memory — reads never
+            # write; the next commit publishes the blobs it keeps
+            refs, stats = {}, d.get("stats", {})
+            for pv, fs in d.get("files", {}).items():
+                st = {f: stats[f] for f in fs if f in stats}
+                blob = {"files": list(fs), "stats": st}
+                refs[pv] = _encode_blob(blob)[0]
+                pending[refs[pv]] = blob
         return Snapshot(
             version=d["version"],
             schema=T.StructType.fromJson(json.loads(d["schema"])),
             partition_col=d["partition_col"],
-            files=d.get("files"),
+            refs=refs,
             applied=d.get("applied", {}),
             properties=d.get("properties", {}),
-            stats=d.get("stats", {}),
-            refs=d.get("refs"),
             blob_loader=blob_loader,
+            pending=pending,
         )
 
 
@@ -454,18 +465,15 @@ class LakeTable:
         self.last_commit_files: list[str] = []
         self._blob_cache: dict[str, dict] = {}  # manifest blobs are immutable
 
-    # ------------------------------------------- split-manifest blobs
+    # ------------------------------------------------- manifest blobs
 
     def _manifest_path(self, name: str) -> str:
         return os.path.join(self.path, _LOG_DIR, "manifests", name)
 
     def _write_blob(self, content: dict) -> str:
-        """Content-addressed immutable manifest blob: same content →
-        same name → an untouched partition is never rewritten."""
-        import hashlib
-
-        data = json.dumps(content, sort_keys=True).encode()
-        name = f"m-{hashlib.sha1(data).hexdigest()}.json"
+        """Publish a content-addressed immutable manifest blob; return
+        its name."""
+        name, data = _encode_blob(content)
         target = self._manifest_path(name)
         os.makedirs(os.path.dirname(target), exist_ok=True)
         try:
@@ -482,6 +490,24 @@ class LakeTable:
             self._blob_cache[name] = blob
         return blob
 
+    def _publish_blobs(
+        self, entries: dict[str, tuple[list[str], dict[str, dict[str, Any]]]]
+    ) -> dict[str, str]:
+        """``{partition: (files, stats)}`` -> ``{partition: blob name}``.
+        Blob publishes fsync — thread them so the driver-side commit
+        latency stays flat in the bucket count. A single blob (a side
+        table's usual commit) publishes on the caller's thread."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        def build(item):
+            pv, (fs, st) = item
+            return pv, self._write_blob({"files": list(fs), "stats": st})
+
+        if len(entries) <= 1:
+            return dict(map(build, entries.items()))
+        with ThreadPoolExecutor(max_workers=min(16, len(entries))) as ex:
+            return dict(ex.map(build, entries.items()))
+
     # ---------------------------------------------------------------- DDL
 
     @staticmethod
@@ -497,14 +523,12 @@ class LakeTable:
             raise ValueError(f"partition column {partition_col!r} not in schema")
         os.makedirs(os.path.join(path, _LOG_DIR), exist_ok=True)
         os.makedirs(os.path.join(path, _DATA_DIR), exist_ok=True)
-        props = properties or {}
         snap = Snapshot(
             version=0,
             schema=schema,
             partition_col=partition_col,
-            files=None if props.get("manifest_split") else {},
-            refs={} if props.get("manifest_split") else None,
-            properties=props,
+            refs={},
+            properties=properties,
         )
         tbl = LakeTable(spark, path, commit_protocol=commit_protocol)
         tbl._write_version(snap)
@@ -581,10 +605,9 @@ class LakeTable:
         partitions: list[Any] | None,
         skip: dict[str, tuple] | None,
     ) -> list[str]:
-        """File selection with partition pruning + stats skipping. In
-        split-manifest layout a PRUNED selection loads only the
-        requested partitions' manifest blobs — the whole point of the
-        manifest-list at 10^6+ files."""
+        """File selection with partition pruning + stats skipping. A
+        PRUNED selection loads only the requested partitions' manifest
+        blobs — the whole point of the manifest list at 10^6+ files."""
         if partitions is None:
             wanted = snap.partition_values()
         else:
@@ -679,11 +702,11 @@ class LakeTable:
     ) -> Snapshot | None:
         """Optimistic-concurrency commit loop.
 
-        ``mutate(snapshot) -> {"schema": ..., "files": ..., "stats":
-        ...}`` (inline layout) or ``{"schema": ..., "refs": ...}``
-        (split layout) computes the next manifest from the freshest
-        snapshot; on a version-file race we re-read and re-apply —
-        partition-level changes rebase cleanly (reference:
+        ``mutate(snapshot) -> {"schema": ..., "refs": ..., "applied":
+        ...}`` computes the next manifest list from the freshest
+        snapshot ("refs" and "applied" default to the snapshot's); on a
+        version-file race we re-read and re-apply — partition-level
+        changes rebase cleanly (reference:
         radiant/tasks/iceberg/utils.py:73-96 rebuilds the transaction
         against a fresh snapshot the same way).
 
@@ -704,15 +727,18 @@ class LakeTable:
             applied = dict(nxt_parts.get("applied", snap.applied))
             if source_id is not None and epoch is not None:
                 applied[source_id] = epoch
+            refs = nxt_parts.get("refs", snap.refs)
+            # a legacy inline base holds its blobs in memory only: the
+            # ones this version keeps must exist before it points at them
+            for name in set(refs.values()) & snap.pending.keys():
+                self._write_blob(snap.pending[name])
             nxt = Snapshot(
                 version=snap.version + 1,
                 schema=nxt_parts["schema"],
                 partition_col=snap.partition_col,
-                files=nxt_parts.get("files"),
+                refs=refs,
                 applied=applied,
                 properties=snap.properties,
-                stats=nxt_parts.get("stats"),
-                refs=nxt_parts.get("refs"),
                 blob_loader=self._load_blob,
             )
             try:
@@ -792,45 +818,14 @@ class LakeTable:
             stat_cols=snap0.properties.get("stats_cols"),
         )
 
-        if snap0.refs is not None:  # split layout: touch O(batch) blobs only
-
-            def mutate(snap: Snapshot):
-                from concurrent.futures import ThreadPoolExecutor
-
-                def build(item):
-                    pv, fs = item
-                    old_files, old_stats = snap.part_entry(pv)
-                    return pv, self._write_blob(
-                        {
-                            "files": old_files + fs,
-                            "stats": {
-                                **old_stats,
-                                **{f: new_stats[f] for f in fs},
-                            },
-                        }
-                    )
-
-                refs = dict(snap.refs)
-                # blob publishes fsync — thread them so the driver-side
-                # commit latency stays flat in the bucket count
-                with ThreadPoolExecutor(
-                    max_workers=min(16, max(1, len(new_files)))
-                ) as ex:
-                    for pv, name in ex.map(build, new_files.items()):
-                        refs[pv] = name
-                return {"schema": self._evolved_schema(snap, df), "refs": refs}
-
-        else:
-
-            def mutate(snap: Snapshot):
-                files = {k: list(v) for k, v in snap.files.items()}
-                for pv, fs in new_files.items():
-                    files.setdefault(pv, []).extend(fs)
-                return {
-                    "schema": self._evolved_schema(snap, df),
-                    "files": files,
-                    "stats": {**snap.stats, **new_stats},
-                }
+        def mutate(snap: Snapshot):
+            entries = {}
+            for pv, fs in new_files.items():
+                old_files, old_stats = snap.part_entry(pv)
+                new = {f: new_stats[f] for f in fs}
+                entries[pv] = (old_files + fs, {**old_stats, **new})
+            refs = {**snap.refs, **self._publish_blobs(entries)}
+            return {"schema": self._evolved_schema(snap, df), "refs": refs}
 
         out = self._commit(mutate, source_id=source_id, epoch=epoch)
         self.last_commit_partitions = sorted(new_files.keys())
@@ -874,65 +869,24 @@ class LakeTable:
         )
         replaced = set(new_files.keys()) | {str(p) for p in (also_replace or [])}
 
-        if snap0.refs is not None:  # split layout
-            # blob names are content hashes, so ref equality IS file-list
-            # equality — conflict validation never loads untouched blobs
-            expected_refs = {p: snap0.refs.get(p) for p in replaced}
+        # blob names are content hashes, so ref equality IS file-list
+        # equality — conflict validation never loads untouched blobs
+        expected = {p: snap0.refs.get(p) for p in replaced}
 
-            def mutate(snap: Snapshot):
-                for p in replaced:
-                    if snap.refs.get(p) != expected_refs[p]:
-                        raise ConcurrentModification(
-                            f"partition {p!r} changed concurrently; recompute "
-                            f"from a fresh snapshot before replacing it"
-                        )
-                from concurrent.futures import ThreadPoolExecutor
-
-                def build(item):
-                    pv, fs = item
-                    return pv, self._write_blob(
-                        {
-                            "files": list(fs),
-                            "stats": {f: new_stats[f] for f in fs},
-                        }
+        def mutate(snap: Snapshot):
+            for p in replaced:
+                if snap.refs.get(p) != expected[p]:
+                    raise ConcurrentModification(
+                        f"partition {p!r} changed concurrently; recompute "
+                        f"from a fresh snapshot before replacing it"
                     )
-
-                refs = {k: v for k, v in snap.refs.items() if k not in replaced}
-                if new_files:
-                    with ThreadPoolExecutor(
-                        max_workers=min(16, len(new_files))
-                    ) as ex:
-                        for pv, name in ex.map(build, new_files.items()):
-                            refs[pv] = name
-                return {"schema": self._evolved_schema(snap, df), "refs": refs}
-
-        else:
-            expected = {p: list(snap0.files.get(p, [])) for p in replaced}
-
-            def mutate(snap: Snapshot):
-                for p in replaced:
-                    if snap.files.get(p, []) != expected[p]:
-                        raise ConcurrentModification(
-                            f"partition {p!r} changed concurrently; recompute "
-                            f"from a fresh snapshot before replacing it"
-                        )
-                files = {
-                    k: list(v) for k, v in snap.files.items() if k not in replaced
-                }
-                dropped = {
-                    f for p in replaced for f in snap.files.get(p, [])
-                }
-                for pv, fs in new_files.items():
-                    files[pv] = list(fs)
-                stats = {
-                    k: v for k, v in snap.stats.items() if k not in dropped
-                }
-                stats.update(new_stats)
-                return {
-                    "schema": self._evolved_schema(snap, df),
-                    "files": files,
-                    "stats": stats,
-                }
+            entries = {
+                pv: (fs, {f: new_stats[f] for f in fs})
+                for pv, fs in new_files.items()
+            }
+            refs = {k: v for k, v in snap.refs.items() if k not in replaced}
+            refs.update(self._publish_blobs(entries))
+            return {"schema": self._evolved_schema(snap, df), "refs": refs}
 
         out = self._commit(mutate, source_id=source_id, epoch=epoch)
         self.last_commit_partitions = sorted(replaced)
@@ -981,63 +935,23 @@ class LakeTable:
                 f"{sorted(unknown)}"
             )
 
-        if snap0.refs is not None:  # split layout
-
-            def mutate(snap: Snapshot):
-                from concurrent.futures import ThreadPoolExecutor
-
-                def build(item):
-                    pv, taken = item
-                    old_files, old_stats = snap.part_entry(pv)
-                    missing = [f for f in taken if f not in old_files]
-                    if missing:
-                        raise ConcurrentModification(
-                            f"files {missing[:3]} in partition {pv!r} were "
-                            f"rewritten concurrently; recompute the fold"
-                        )
-                    taken_set = set(taken)
-                    fs = [f for f in old_files if f not in taken_set]
-                    fs += new_files.get(pv, [])
-                    stats = {
-                        f: old_stats[f] for f in fs if f in old_stats
-                    }
-                    stats.update(
-                        {f: new_stats[f] for f in new_files.get(pv, [])}
+        def mutate(snap: Snapshot):
+            entries = {}
+            for pv, taken in replace.items():
+                old_files, old_stats = snap.part_entry(pv)
+                missing = [f for f in taken if f not in old_files]
+                if missing:
+                    raise ConcurrentModification(
+                        f"files {missing[:3]} in partition {pv!r} were "
+                        f"rewritten concurrently; recompute the fold"
                     )
-                    return pv, self._write_blob({"files": fs, "stats": stats})
-
-                refs = dict(snap.refs)
-                with ThreadPoolExecutor(
-                    max_workers=min(16, max(1, len(replace)))
-                ) as ex:
-                    for pv, name in ex.map(build, replace.items()):
-                        refs[pv] = name
-                return {"schema": self._evolved_schema(snap, df), "refs": refs}
-
-        else:
-
-            def mutate(snap: Snapshot):
-                files = {k: list(v) for k, v in snap.files.items()}
-                stats = dict(snap.stats)
-                for pv, taken in replace.items():
-                    cur = files.get(pv, [])
-                    missing = [f for f in taken if f not in cur]
-                    if missing:
-                        raise ConcurrentModification(
-                            f"files {missing[:3]} in partition {pv!r} were "
-                            f"rewritten concurrently; recompute the fold"
-                        )
-                    taken_set = set(taken)
-                    files[pv] = [f for f in cur if f not in taken_set]
-                    files[pv] += new_files.get(pv, [])
-                    for f in taken:
-                        stats.pop(f, None)
-                stats.update(new_stats)
-                return {
-                    "schema": self._evolved_schema(snap, df),
-                    "files": files,
-                    "stats": stats,
-                }
+                taken_set = set(taken)
+                fs = [f for f in old_files if f not in taken_set]
+                fs += new_files.get(pv, [])
+                st = {**old_stats, **new_stats}
+                entries[pv] = (fs, {f: st[f] for f in fs if f in st})
+            refs = {**snap.refs, **self._publish_blobs(entries)}
+            return {"schema": self._evolved_schema(snap, df), "refs": refs}
 
         out = self._commit(mutate)
         assert out is not None
@@ -1063,13 +977,7 @@ class LakeTable:
             for f in fields:
                 if f.name not in names:
                     out.append(T.StructField(f.name, f.dataType, nullable=True))
-            if snap.refs is not None:
-                return {"schema": T.StructType(out), "refs": snap.refs}
-            return {
-                "schema": T.StructType(out),
-                "files": snap.files,
-                "stats": snap.stats,
-            }
+            return {"schema": T.StructType(out)}
 
         snap = self._commit(mutate)
         assert snap is not None
@@ -1086,13 +994,7 @@ class LakeTable:
             merged = dict(snap.applied)
             for src, ep in applied.items():
                 merged[src] = max(merged.get(src, -1), ep)
-            out = {"schema": snap.schema, "applied": merged}
-            if snap.refs is not None:
-                out["refs"] = snap.refs
-            else:
-                out["files"] = snap.files
-                out["stats"] = snap.stats
-            return out
+            return {"schema": snap.schema, "applied": merged}
 
         snap = self._commit(mutate)
         assert snap is not None
@@ -1160,7 +1062,7 @@ class LakeTable:
             for f in fs
         }
         # GC manifest blobs not referenced by any remaining version
-        live_blobs = {n for s in snaps if s.refs for n in s.refs.values()}
+        live_blobs = {n for s in snaps for n in s.refs.values()}
         mdir = os.path.join(self.path, _LOG_DIR, "manifests")
         try:
             blob_names = self.commit_protocol.list_names(mdir)

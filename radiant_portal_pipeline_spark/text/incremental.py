@@ -129,7 +129,6 @@ class IncrementalMinHashIndex:
             properties={
                 "num_buckets": num_buckets,
                 "shingle_k": k,
-                "manifest_split": True,
                 "stats_cols": ["epoch"],
             },
         )
@@ -138,7 +137,7 @@ class IncrementalMinHashIndex:
             f"{path}/versions",
             _VERSIONS_SCHEMA,
             partition_col="vbucket",
-            properties={"num_buckets": num_buckets, "manifest_split": True},
+            properties={"num_buckets": num_buckets},
         )
         return IncrementalMinHashIndex(bands, versions)
 

@@ -229,7 +229,7 @@ def test_racing_appends_all_land_split_manifests(spark, tmp_path):
     path = str(tmp_path / "t")
     LakeTable.create(
         spark, path, SCHEMA, "part",
-        properties={"manifest_split": True, "stats_cols": ["v"]},
+        properties={"stats_cols": ["v"]},
     )
     n_writers, rows_each = 6, 5
 
@@ -255,9 +255,7 @@ def test_racing_appends_all_land_split_manifests(spark, tmp_path):
 
 def test_split_disjoint_overwrites_rebase_cleanly(spark, tmp_path):
     path = str(tmp_path / "t")
-    tbl0 = LakeTable.create(
-        spark, path, SCHEMA, "part", properties={"manifest_split": True}
-    )
+    tbl0 = LakeTable.create(spark, path, SCHEMA, "part")
     tbl0.append(
         spark.createDataFrame([("seed0", 0, 0), ("seed1", 0, 1)], SCHEMA)
     )
@@ -283,9 +281,7 @@ def test_vacuum_grace_keeps_inflight_commit_artifacts(spark, tmp_path):
     import os
 
     path = str(tmp_path / "t")
-    tbl = LakeTable.create(
-        spark, path, SCHEMA, "part", properties={"manifest_split": True}
-    )
+    tbl = LakeTable.create(spark, path, SCHEMA, "part")
     tbl.append(spark.createDataFrame([("a", 1, 0)], SCHEMA))
 
     # "in-flight" artifacts: an unreferenced data dir + manifest blob
@@ -368,7 +364,7 @@ def test_merge_engine_runs_on_inmemory_protocol(spark, tmp_path):
     tbl = LakeTable.create(
         spark, path, S.sink_schema(), S.PART_COL,
         commit_protocol=proto,
-        properties={"num_buckets": 8, "manifest_split": True},
+        properties={"num_buckets": 8},
     )
     eng = TranscriptMergeEngine(tbl, num_buckets=8)
     feed = synthetic_feed(spark, 3000)

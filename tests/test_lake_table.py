@@ -200,17 +200,32 @@ def test_custom_commit_protocol_seam(spark, tmp_path):
 def _split_tbl(spark, tmp_path, name="ts"):
     return LakeTable.create(
         spark, str(tmp_path / name), SCHEMA, "part",
-        properties={"manifest_split": True, "stats_cols": ["v"]},
+        properties={"stats_cols": ["v"]},
     )
+
+
+def _latest_version_json(path):
+    import json
+    import os
+
+    log = os.path.join(path, "_log")
+    latest = max(f for f in os.listdir(log) if f.startswith("v"))
+    with open(os.path.join(log, latest)) as fh:
+        return json.load(fh)
 
 
 def test_split_manifest_roundtrip_and_blob_reuse(spark, tmp_path):
     """Iceberg-style manifest-list: the version file carries only
     per-partition content-hash refs; a commit touching one bucket
-    reuses every other bucket's blob (same hash, no rewrite)."""
+    reuses every other bucket's blob (same hash, no rewrite). This is
+    the default layout of every table, side tables included."""
     import os
 
-    tbl = _split_tbl(spark, tmp_path)
+    from radiant_portal_pipeline_spark.cdc.analytics import ConversationStats
+    from radiant_portal_pipeline_spark.cdc.lineage import LineageWriter
+    from radiant_portal_pipeline_spark.cdc.merge import TranscriptMergeEngine
+
+    tbl = LakeTable.create(spark, str(tmp_path / "ts"), SCHEMA, "part")
     tbl.append(_df(spark, [("a", 1, 0), ("b", 2, 1), ("c", 3, 2)]))
     snap1 = tbl.snapshot()
     assert snap1.refs is not None and set(snap1.refs) == {"0", "1", "2"}
@@ -231,6 +246,57 @@ def test_split_manifest_roundtrip_and_blob_reuse(spark, tmp_path):
         os.path.join(str(tmp_path / "ts"), "_log",
                      f"v{snap2.version:012d}.json")).read())
     assert "files" not in raw and "refs" in raw
+    sink = TranscriptMergeEngine.create_table(spark, str(tmp_path / "sink"), 4)
+    ConversationStats(spark, str(tmp_path / "stats"), TranscriptMergeEngine(sink))
+    LineageWriter(spark, str(tmp_path / "lineage"))
+    for side in ("stats", "lineage"):
+        raw = _latest_version_json(str(tmp_path / side))
+        assert "refs" in raw and "files" not in raw, side
+
+
+def test_legacy_inline_version_reads_and_becomes_split_on_commit(spark, tmp_path):
+    """A version file in the old inline layout (whole files/stats maps,
+    no refs, no blobs on disk) stays readable, and the first commit on
+    top of it publishes the blobs its untouched partitions' refs name."""
+    import json
+    import os
+    import shutil
+
+    tbl = _split_tbl(spark, tmp_path)
+    tbl.append(_df(spark, [("a", 1, 0), ("b", 2, 1), ("c", 3, 2)]))
+    tbl.append(_df(spark, [("c2", 30, 2)]))
+    rows = {tuple(r) for r in tbl.read().collect()}
+    pruned = tbl.live_files(partitions=[2], skip={"v": (10, None)})
+    assert len(pruned) == 1 and len(tbl.live_files(partitions=[2])) == 2
+    snap = tbl.snapshot()
+    raw = _latest_version_json(tbl.path)
+    del raw["refs"]
+    raw["files"], raw["stats"] = snap.files, snap.stats
+    vfile = os.path.join(tbl.path, "_log", f"v{snap.version:012d}.json")
+    with open(vfile, "w") as fh:
+        json.dump(raw, fh)
+    mdir = os.path.join(tbl.path, "_log", "manifests")
+    shutil.rmtree(mdir)
+
+    fresh = LakeTable(spark, tbl.path)
+    assert {tuple(r) for r in fresh.read().collect()} == rows
+    assert fresh.live_files(partitions=[2], skip={"v": (10, None)}) == pruned
+    assert not os.path.exists(mdir)  # reads never write
+
+    fresh.append(_df(spark, [("d", 4, 0)]))
+    rows |= {("d", 4, 0)}
+    cold = LakeTable(spark, tbl.path)  # cold blob cache: every ref must exist
+    assert {tuple(r) for r in cold.read().collect()} == rows
+    for p in ("0", "1", "2"):
+        assert {r["k"] for r in cold.read(partitions=[p]).collect()} == {
+            k for k, _v, part in rows if str(part) == p
+        }
+    raw = _latest_version_json(tbl.path)
+    assert "refs" in raw and "files" not in raw and "stats" not in raw
+
+    cold.expire_snapshots(keep_last=1)
+    cold.vacuum(grace_seconds=0)
+    assert {tuple(r) for r in LakeTable(spark, tbl.path).read().collect()} == rows
 
 
 def test_split_manifest_pruned_read_loads_only_needed_blobs(spark, tmp_path):
@@ -336,9 +402,7 @@ def test_blob_gc_on_protocol_managed_store(spark, tmp_path):
 
     proto = InMemoryCommitProtocol()
     tbl = LakeTable.create(
-        spark, str(tmp_path / "t"), SCHEMA, "part",
-        properties={"manifest_split": True},
-        commit_protocol=proto,
+        spark, str(tmp_path / "t"), SCHEMA, "part", commit_protocol=proto
     )
     tbl.append(_df(spark, [("a", 1, 0)]))
     tbl.overwrite_partitions(_df(spark, [("a2", 2, 0)]))
