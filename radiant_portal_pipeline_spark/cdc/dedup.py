@@ -124,7 +124,6 @@ def lww_dedup(
     df: DataFrame,
     keys: Sequence[str],
     order_cols: Sequence[str],
-    use_window: bool = False,
     via: str = "auto",
 ) -> DataFrame:
     """Keep, per key, the single row with the greatest ``order_cols``
@@ -134,7 +133,8 @@ def lww_dedup(
 
     ``via``: "auto" (argmax where eligible; max_struct otherwise; the
     window for map payloads, which neither hash plan can serve),
-    "argmax", "max_struct".
+    "argmax", "max_struct", "window" (the reference's row_number
+    plan).
 
     NULL order values: rows whose order tuple is NULL lose to any
     non-NULL row (NULLs sort first). A key whose rows are ALL NULL in
@@ -147,17 +147,17 @@ def lww_dedup(
     ``via="max_struct"``."""
     keys = list(keys)
     order_cols = list(order_cols)
-    if via == "auto" and not use_window:
+    if via == "auto":
         if argmax_eligible(df, keys, order_cols):
             via = "argmax"
         elif _has_map_type(df):
             # max(struct(..., payload)) can't ORDER a map payload either
             # (INVALID_ORDERING_TYPE) — the window plan is the only one
             # that never compares payloads
-            use_window = True
+            via = "window"
         else:
             via = "max_struct"
-    if use_window:
+    if via == "window":
         w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_cols])
         return (
             df.withColumn("_rn", F.row_number().over(w))

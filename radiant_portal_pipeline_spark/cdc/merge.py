@@ -12,10 +12,11 @@ Semantics (the reference's incremental protocol, re-expressed Spark-first
 2. **LWW dedup** — the winning ``lsn`` per ``(conv_id, turn_idx)``
    (reference W1 row_number pattern) as a hash aggregate with map-side
    partial combine, so hot conversations reduce before the shuffle,
-   then a semi join back to the winning rows. Per batch the adaptive
-   default picks ``append_only``, ``argmax_broadcast`` or shuffled
-   ``argmax`` (see ``_choose_plan``); argmax-ineligible schemas take
-   ``FALLBACK_PLAN``.
+   then a semi join back to the winning rows. The engine picks the
+   plan per batch from what it observes — ``append_only``,
+   ``argmax_broadcast`` or shuffled ``argmax`` (see ``_choose_plan``,
+   which no setting overrides); argmax-ineligible schemas take
+   ``FALLBACK_PLAN``. ``compact()`` folds with shuffled ``argmax``.
 3. **Partition pruning** — ``part = pmod(xxhash64(conv_id), buckets)``;
    only partitions present in the batch are touched.
 4. **Deletes** become tombstones (``_deleted = true``) that keep their
@@ -65,6 +66,7 @@ _SRC_RANK = "_src_rank"  # tie-break: batch row beats existing row at equal lsn
 
 # adaptive chooser constants (see _choose_plan)
 _DUP_SHARE_THRESHOLD = 0.03  # below: insert-dominant batch -> append_only
+_BROADCAST_MAX_WINNERS = 2_000_000  # est. winners above: shuffled argmax
 _CHOOSER_RSD = 0.02  # HLL relative error of the distinct-key estimate
 # plan label for schemas the argmax plans cannot serve (map payloads,
 # multi-column ordering): lww_dedup(via="auto") + layout repartition
@@ -78,7 +80,7 @@ class MergeStats:
     parts_touched: int = 0
     parts: list = None
     seconds: float = 0.0
-    plan: str = ""  # physical plan actually used (adaptive resolves per batch)
+    plan: str = ""  # physical plan _choose_plan picked for this batch
 
 
 def part_expr(conv_col: str, num_buckets: int):
@@ -95,20 +97,10 @@ class TranscriptMergeEngine:
         lsn_col: str = S.LSN_COL,
         mode: str = "mor",
         lineage=None,
-        merge_plan: str = "adaptive",
-        broadcast_max_winners: int = 2_000_000,
         quarantine: "LakeTable | None" = None,
-        compact_broadcast_min_bytes: int = 256 << 20,
     ):
         if mode not in ("mor", "cow"):
             raise ValueError(f"unknown merge mode {mode!r}")
-        if merge_plan not in ("adaptive", "argmax", "argmax_broadcast", "append_only"):
-            raise ValueError(f"unknown merge_plan {merge_plan!r}")
-        if merge_plan == "append_only" and mode != "mor":
-            raise ValueError(
-                "append_only elides the write-path dedup, which is only "
-                "correct under MoR read-side LWW — copy-on-write must fold"
-            )
         self.table = table
         # The bucket count is part of the TABLE's identity (rows are
         # physically placed by pmod(xxhash64(conv_id), buckets)): an
@@ -130,15 +122,7 @@ class TranscriptMergeEngine:
         self.key_cols = list(key_cols)
         self.lsn_col = lsn_col
         self.mode = mode
-        self.merge_plan = merge_plan
         self.lineage = lineage  # optional LineageWriter (cdc.lineage)
-        # adaptive chooser: estimated winners above this bound take the
-        # shuffled argmax instead of broadcasting them
-        self.broadcast_max_winners = int(broadcast_max_winners)
-        # compact(): minimum manifest-recorded fold size before the
-        # broadcast-upgrade estimator runs (see compact) — small folds
-        # are fixed-cost-bound and keep the estimator-free plan
-        self.compact_broadcast_min_bytes = int(compact_broadcast_min_bytes)
         # dead-letter table: when set, contract-violating rows (NULL
         # merge key / NULL lsn) are SPLIT OUT with a reason and the
         # valid remainder merges; when None (default), the in-plan
@@ -214,9 +198,9 @@ class TranscriptMergeEngine:
     # ------------------------------------------------------------------
 
     def _choose_plan(self, df: DataFrame) -> tuple[str, str]:
-        """Resolve ``merge_plan="adaptive"`` for ONE batch. Returns
-        (plan, reason) — the reason goes to lineage so operators can
-        audit choices.
+        """Pick the physical plan for ONE batch — the only place a merge
+        plan is chosen. Returns (plan, reason) — the reason goes to
+        lineage so operators can audit choices.
 
         Schemas the argmax plans cannot serve (map payload columns)
         take ``FALLBACK_PLAN``. Every other batch takes an argmax plan:
@@ -235,8 +219,7 @@ class TranscriptMergeEngine:
         shuffle). HLL sees EVERY key, so duplicate mass concentrated in
         a handful of hot keys is detected deterministically. Both
         estimates are deterministic per batch content, so replays
-        choose the same plan. Pin ``merge_plan`` to skip the estimator
-        on a known feed.
+        choose the same plan.
 
         - dup_share < _DUP_SHARE_THRESHOLD (insert-dominant) ->
           append_only: skip the write-path dedup entirely. MoR
@@ -244,7 +227,7 @@ class TranscriptMergeEngine:
           results; eliding measures ~40% faster on a 16M-row
           all-new-keys batch (BENCH.md). A wrong borderline guess costs
           bounded storage until compact, never correctness.
-        - est distinct keys <= broadcast_max_winners ->
+        - est distinct keys <= _BROADCAST_MAX_WINNERS ->
           argmax_broadcast: the winners (keys+lsn) ship to every task
           and the batch's FULL ROWS move through ZERO exchanges before
           the layout repartition.
@@ -258,8 +241,13 @@ class TranscriptMergeEngine:
         if not argmax_eligible(df, [S.PART_COL, *self.key_cols], [self.lsn_col]):
             return FALLBACK_PLAN, "argmax_ineligible"
         if self.mode == "mor":
-            row = self._estimate_batch(df)
-            if row is not None and row["n"]:
+            row = df.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.approx_count_distinct(
+                    F.xxhash64(*self.key_cols), _CHOOSER_RSD
+                ).alias("nk"),
+            ).head()
+            if row["n"]:
                 dup_share = max(0.0, 1.0 - row["nk"] / row["n"])
                 if dup_share < _DUP_SHARE_THRESHOLD:
                     return (
@@ -267,32 +255,21 @@ class TranscriptMergeEngine:
                         f"dup_share~{dup_share:.4f}<"
                         f"{_DUP_SHARE_THRESHOLD} (insert-dominant)",
                     )
-                if row["nk"] <= self.broadcast_max_winners:
+                if row["nk"] <= _BROADCAST_MAX_WINNERS:
                     return (
                         "argmax_broadcast",
                         f"dup_share~{dup_share:.4f}, est_keys~{row['nk']}"
-                        f"<={self.broadcast_max_winners}",
+                        f"<={_BROADCAST_MAX_WINNERS}",
                     )
-                return "argmax", f"est_keys~{row['nk']}>{self.broadcast_max_winners}"
+                return "argmax", f"est_keys~{row['nk']}>{_BROADCAST_MAX_WINNERS}"
         return "argmax", "argmax_eligible"
 
-    def _estimate_batch(self, df: DataFrame):
-        """The chooser's one full-coverage estimator job: row count +
-        HLL distinct keys (shared by the adaptive chooser and compact's
-        broadcast upgrade)."""
-        return df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct(
-                F.xxhash64(*self.key_cols), _CHOOSER_RSD
-            ).alias("nk"),
-        ).head()
-
     def _dedup_and_layout(
-        self, df: DataFrame, keys, order_cols, plan: str | None = None
+        self, df: DataFrame, keys, order_cols, plan: str
     ) -> DataFrame:
-        """LWW + write layout, per ``merge_plan``.
+        """LWW + write layout for ``plan`` (one of _choose_plan's).
 
-        ``argmax`` (default via adaptive): hash-agg max(lsn) per key
+        ``argmax``: hash-agg max(lsn) per key
         (exchange carries keys+lsn ONLY, map-side partial combine),
         shuffled-hash LEFT SEMI join back (full-row exchange keyed on
         keys+lsn — unique per row, so hot conversations spread
@@ -311,13 +288,6 @@ class TranscriptMergeEngine:
         with ``via="auto"`` — max-struct for orderable payloads, the
         window plan for map-bearing ones — then the layout
         repartition."""
-        plan = plan or self.merge_plan
-        if plan == "adaptive":  # callers resolve per batch; stay safe here
-            from radiant_portal_pipeline_spark.cdc.dedup import argmax_eligible
-
-            plan = (
-                "argmax" if argmax_eligible(df, keys, order_cols) else FALLBACK_PLAN
-            )
         if plan == "append_only":
             return df.repartition(self.num_buckets, F.col(S.PART_COL))
         if plan in ("argmax", "argmax_broadcast"):
@@ -344,8 +314,8 @@ class TranscriptMergeEngine:
     def _prepare_batch(self, batch: DataFrame) -> tuple[DataFrame, str, str]:
         """LWW-dedup the batch, fold op -> tombstone flag, add bucket,
         lay out for the partitioned write (see _dedup_and_layout).
-        Returns (prepared, plan, reason) — plan is the resolved
-        physical strategy (adaptive picks per batch).
+        Returns (prepared, plan, reason) — plan and reason are
+        ``_choose_plan``'s pick for this batch.
 
         The envelope is slimmed BEFORE the aggregation: ``op`` folds to
         the 1-byte tombstone flag and ``commit_epoch`` is dropped
@@ -374,9 +344,7 @@ class TranscriptMergeEngine:
             .withColumn(S.DELETED_COL, (F.col("op") == F.lit("D")))
             .drop("op", "commit_epoch")
         )
-        plan, reason = self.merge_plan, "static"
-        if plan == "adaptive":
-            plan, reason = self._choose_plan(slim)
+        plan, reason = self._choose_plan(slim)
         deduped = self._dedup_and_layout(
             slim, [S.PART_COL, *self.key_cols], [self.lsn_col], plan=plan
         )
@@ -438,12 +406,6 @@ class TranscriptMergeEngine:
         src = prepared.withColumn(_SRC_RANK, F.lit(1))
         tgt = existing.withColumn(_SRC_RANK, F.lit(0))
         unioned = src.unionByName(tgt, allowMissingColumns=True)
-        if plan == "argmax_broadcast":
-            # CoW folds the batch with ALL existing keys of the touched
-            # buckets — the winners set is table-scale, not batch-scale,
-            # so the broadcast variant's size estimate does not apply;
-            # fall back to the shuffled argmax join.
-            plan = "argmax"
         if plan == "argmax":
             # fold the (lsn, src_rank) ordering into ONE bigint so the
             # argmax plan stays eligible (it needs a single order
@@ -551,7 +513,6 @@ class TranscriptMergeEngine:
         purge_tombstones_below: int | None = None,
         min_files_per_bucket: int | None = None,
         small_file_bytes: int | None = None,
-        concurrent_safe: bool = False,
     ) -> list:
         """Fold MoR deltas: rewrite partitions to one row per key.
         Tombstones are KEPT by default — they guard against out-of-order
@@ -571,19 +532,21 @@ class TranscriptMergeEngine:
         partition-scoped rewrites, never a full-table pass. Returns the
         list of partitions actually compacted.
 
-        ``concurrent_safe=True`` commits through the FILE-scoped
-        ``LakeTable.rewrite_files`` instead of the partition-level
-        replace: only the exact input files of the pinned snapshot are
-        swapped for the folded output, so an ingest batch APPENDING to
-        the same buckets mid-compaction rebases cleanly instead of
-        aborting the compaction — the overlap mode a streaming MoR
-        table needs (compaction runs behind the stream; MoR read-side
-        LWW keeps reads correct throughout). Result-equal to the
-        default: folding a subset of a partition's files is valid under
-        MoR because reads LWW-merge files anyway; only a concurrent
-        REWRITE of the same files aborts (two compactors)."""
-        snap = self.table.snapshot()
-        base_version = snap.version  # pin what we fold
+        The fold runs the shuffled ``argmax`` (``FALLBACK_PLAN`` for
+        argmax-ineligible schemas) — never ``append_only``, folding is
+        compaction's whole purpose. Every compaction commits
+        FILE-scoped through ``LakeTable.rewrite_files`` (Iceberg's
+        RewriteFiles): only the exact input files of the pinned
+        snapshot are swapped for the folded output, so an ingest batch
+        APPENDING to the same buckets mid-compaction rebases cleanly
+        instead of aborting the compaction (compaction runs behind the
+        stream; MoR read-side LWW keeps reads correct throughout).
+        Folding a subset of a partition's files is valid under MoR
+        because reads LWW-merge files anyway; only a concurrent REWRITE
+        of the same files aborts (two compactors)."""
+        from radiant_portal_pipeline_spark.cdc.dedup import argmax_eligible
+
+        snap = self.table.snapshot()  # pin what we fold
         if partitions is not None:
             parts = list(partitions)
         else:
@@ -598,50 +561,11 @@ class TranscriptMergeEngine:
                 ]
         if not parts:
             return []
-        from radiant_portal_pipeline_spark.cdc.dedup import argmax_eligible
-
-        fold_in = self.table.read(partitions=parts, version=base_version)
+        fold_in = self.table.read(partitions=parts, version=snap.version)
         keys = [S.PART_COL, *self.key_cols]
-        # NEVER inherit an append_only engine default here: folding is
-        # compaction's entire purpose. But DO give LARGE folds the same
-        # broadcast upgrade the apply path has: one thin estimator job
-        # bounds the distinct-key count, and a bounded fold runs the
-        # broadcast semi join — zero full-row exchanges before the
-        # layout repartition — instead of shuffling every table row
-        # through the SHUFFLE_HASH join (an update-heavy table folds
-        # many appended versions down to few keys, exactly the
-        # broadcast shape). Small folds skip the estimator outright:
-        # the A/B is a wash up to ~70 MB (fixed costs dominate; the
-        # extra job costs what the saved exchange saves) and the
-        # broadcast wins 10-35% at an 858 MB / 32M-row fold (round-6
-        # measurements). The size gate reads the manifest's per-file
-        # _bytes — zero Spark jobs; files with unknown size count as
-        # large (conservative toward estimating, never toward skipping
-        # a profitable upgrade). Unbounded folds keep shuffled argmax.
-        plan = "adaptive"
-        fold_bytes = 0
-        stats_known = True
-        for p in parts:
-            for f in snap.files.get(p, []):
-                b = snap.stats.get(f, {}).get("_bytes")
-                if b is None:
-                    stats_known = False
-                else:
-                    fold_bytes += int(b)
-        big_fold = (not stats_known) or fold_bytes >= self.compact_broadcast_min_bytes
-        if big_fold and argmax_eligible(fold_in, keys, [self.lsn_col]):
-            est = self._estimate_batch(fold_in)
-            if (
-                est is not None
-                and est["n"]
-                and est["nk"] <= self.broadcast_max_winners
-            ):
-                plan = "argmax_broadcast"
+        eligible = argmax_eligible(fold_in, keys, [self.lsn_col])
         folded = self._dedup_and_layout(
-            fold_in,
-            keys,
-            [self.lsn_col],
-            plan=plan,
+            fold_in, keys, [self.lsn_col], "argmax" if eligible else FALLBACK_PLAN
         )
         if purge_tombstones_below is not None:
             folded = folded.filter(
@@ -650,24 +574,13 @@ class TranscriptMergeEngine:
                     & (F.col(self.lsn_col) < purge_tombstones_below)
                 )
             )
-        if concurrent_safe:
-            # swap exactly the files the fold READ; files appended
-            # after base_version stay live (MoR reads LWW over them)
-            self.table.rewrite_files(
-                folded,
-                replace={p: list(snap.files.get(p, [])) for p in parts},
-                layout_ready=True,
-            )
-        else:
-            # base_version makes a concurrent append to these buckets
-            # abort the compaction (ConcurrentModification) instead of
-            # being lost
-            self.table.overwrite_partitions(
-                folded,
-                also_replace=parts,
-                layout_ready=True,
-                base_version=base_version,
-            )
+        # swap exactly the files the fold READ; files appended after
+        # the pinned snapshot stay live (MoR reads LWW over them)
+        self.table.rewrite_files(
+            folded,
+            replace={p: snap.files.get(str(p), []) for p in parts},
+            layout_ready=True,
+        )
         return parts
 
     def rescale(self, new_path: str, new_buckets: int) -> "TranscriptMergeEngine":
@@ -732,10 +645,7 @@ class TranscriptMergeEngine:
             lsn_col=self.lsn_col,
             mode=self.mode,
             lineage=self.lineage,
-            merge_plan=self.merge_plan,
-            broadcast_max_winners=self.broadcast_max_winners,
             quarantine=self.quarantine,
-            compact_broadcast_min_bytes=self.compact_broadcast_min_bytes,
         )
 
     def current_state(self, include_meta: bool = False) -> DataFrame:

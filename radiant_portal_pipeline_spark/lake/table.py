@@ -154,25 +154,29 @@ class InMemoryCommitProtocol(CommitProtocol):
     dict, strongly consistent LIST). Exists to prove the lake's
     transactionality rests ONLY on the CommitProtocol contract, not on
     POSIX details, and to let tests inject races deterministically:
-    ``inject_before_put(store, target)`` runs inside the store lock
-    right before the existence check — a hook can publish a competing
-    name there and force the exact lost-update interleaving optimistic
-    commits must survive. Share ONE instance across every handle of a
-    table (the dict IS the store)."""
+    ``inject_before_put(store, target)`` runs once, on the publishing
+    thread, right before that publish's existence check — a hook can
+    publish a competing name there and force the exact lost-update
+    interleaving optimistic commits must survive. The hook runs
+    OUTSIDE the store lock, so a hooked commit may publish from other
+    threads (the multi-blob publish pool) without deadlocking. Share
+    ONE instance across every handle of a table (the dict IS the
+    store)."""
 
     def __init__(self, inject_before_put=None):
         import threading
 
         self._store: dict[str, bytes] = {}
         self._published_at: dict[str, float] = {}  # for age_seconds / GC grace
-        self._lock = threading.RLock()  # RLock: hooks may publish
+        self._lock = threading.Lock()
         self.inject_before_put = inject_before_put
 
     def publish(self, target: str, data: bytes) -> None:
+        with self._lock:  # one-shot: re-arm explicitly if needed
+            hook, self.inject_before_put = self.inject_before_put, None
+        if hook is not None:
+            hook(self, target)
         with self._lock:
-            if self.inject_before_put is not None:
-                hook, self.inject_before_put = self.inject_before_put, None
-                hook(self, target)  # one-shot: re-arm explicitly if needed
             if target in self._store:
                 raise FileExistsError(target)
             import time as _time
@@ -915,7 +919,8 @@ class LakeTable:
         ``replace`` maps partition value -> input files (as listed by
         the snapshot the fold was computed from). A partition whose
         fold produced no output (e.g. all rows tombstone-purged) simply
-        loses its input files."""
+        loses its input files; one left with no files at all leaves the
+        table, as in ``overwrite_partitions``."""
         snap0 = self.snapshot()
         schema = self._evolved_schema(snap0, df)
         new_files, new_stats = self._write_data_files(
@@ -936,7 +941,7 @@ class LakeTable:
             )
 
         def mutate(snap: Snapshot):
-            entries = {}
+            entries, emptied = {}, set()
             for pv, taken in replace.items():
                 old_files, old_stats = snap.part_entry(pv)
                 missing = [f for f in taken if f not in old_files]
@@ -948,9 +953,13 @@ class LakeTable:
                 taken_set = set(taken)
                 fs = [f for f in old_files if f not in taken_set]
                 fs += new_files.get(pv, [])
+                if not fs:
+                    emptied.add(pv)
+                    continue
                 st = {**old_stats, **new_stats}
                 entries[pv] = (fs, {f: st[f] for f in fs if f in st})
-            refs = {**snap.refs, **self._publish_blobs(entries)}
+            refs = {k: v for k, v in snap.refs.items() if k not in emptied}
+            refs.update(self._publish_blobs(entries))
             return {"schema": self._evolved_schema(snap, df), "refs": refs}
 
         out = self._commit(mutate)
@@ -958,7 +967,7 @@ class LakeTable:
         # deliberately does NOT touch self.last_commit_partitions (nor
         # last_commit_files):
         # rewrite_files is designed to run CONCURRENTLY with an ingest
-        # thread on the same handle (compact(concurrent_safe=True)),
+        # thread on the same handle (every compact() commits here),
         # and merge_batch reads last_commit_partitions right after its
         # append — a background rewrite overwriting it in that window
         # would misreport the batch's touched buckets to lineage and

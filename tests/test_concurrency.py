@@ -324,17 +324,27 @@ def test_inmemory_protocol_contract():
         proto.read("/t/_log/v0.json")
 
 
-def test_injected_race_forces_rebase_and_both_commits_land(spark, tmp_path):
+@pytest.mark.parametrize("rival_parts", [1, 2])
+def test_injected_race_forces_rebase_and_both_commits_land(
+    spark, tmp_path, rival_parts
+):
     """Deterministic lost-update interleaving: the hook publishes a
-    competing version INSIDE the store lock right before writer A's
-    PUT, so A MUST lose exactly once, rebase, and land at the next
-    version — no retry luck involved."""
+    competing version right before writer A's first PUT, so A MUST
+    lose exactly once, rebase, and land at the next version — no retry
+    luck involved. A rival touching 2 partitions publishes its blobs
+    from the publish pool's threads while the victim's PUT is pending;
+    the victim runs in a daemon thread so a deadlock fails the test
+    instead of hanging the suite."""
+    import threading
+
     path = str(tmp_path / "t")
     proto = InMemoryCommitProtocol()
     LakeTable.create(spark, path, SCHEMA, "part", commit_protocol=proto)
     tbl = LakeTable(spark, path, commit_protocol=proto)
 
-    rival_rows = spark.createDataFrame([("rival", 1, 0)], SCHEMA)
+    rival_rows = spark.createDataFrame(
+        [("rival", 1, p) for p in range(rival_parts)], SCHEMA
+    )
     rival = LakeTable(spark, path, commit_protocol=proto)
 
     state = {"fired": False}
@@ -345,9 +355,23 @@ def test_injected_race_forces_rebase_and_both_commits_land(spark, tmp_path):
         rival.append(rival_rows)
 
     proto.inject_before_put = hook
-    snap = tbl.append(spark.createDataFrame([("victim", 2, 0)], SCHEMA))
+    out = {}
+
+    def victim():
+        try:
+            out["snap"] = tbl.append(
+                spark.createDataFrame([("victim", 2, 0)], SCHEMA)
+            )
+        except Exception as e:  # noqa: BLE001
+            out["err"] = e
+
+    th = threading.Thread(target=victim, daemon=True)
+    th.start()
+    th.join(timeout=120)
+    assert not th.is_alive(), "hooked commit deadlocked"
+    assert "err" not in out, out["err"]
     assert state["fired"]
-    assert snap.version == 2  # lost v1 to the rival, rebased onto it
+    assert out["snap"].version == 2  # lost v1 to the rival, rebased onto it
     ks = {r["k"] for r in tbl.read().collect()}
     assert ks == {"rival", "victim"}
 
@@ -506,6 +530,22 @@ def test_rewrite_files_conflicts_with_concurrent_rewrite(spark, tmp_path):
         LakeTable(spark, path).rewrite_files(folded, replace=base_files)
 
 
+def test_rewrite_files_drops_emptied_partitions(spark, tmp_path):
+    """A rewrite that leaves a partition with no files (every row of
+    its fold purged) removes the partition, as a partition overwrite
+    does — no dead bucket stays listed behind an empty manifest."""
+    path = str(tmp_path / "t")
+    tbl = LakeTable.create(spark, path, SCHEMA, "part")
+    tbl.append(spark.createDataFrame([("a", 1, 0), ("b", 2, 1)], SCHEMA))
+    snap = tbl.snapshot()
+    gone = list(snap.files["0"])
+    tbl.rewrite_files(spark.createDataFrame([], SCHEMA), replace={"0": gone})
+    assert tbl.partitions() == ["1"]
+    assert tbl.live_files() == snap.files["1"]
+    assert tbl.live_files(partitions=[0]) == []
+    assert {tuple(r) for r in tbl.read().collect()} == {("b", 2, 1)}
+
+
 def test_rewrite_files_rejects_unread_partitions(spark, tmp_path):
     """A fold emitting rows for a partition it never read is a bug in
     the caller — refuse instead of silently adding files."""
@@ -518,8 +558,8 @@ def test_rewrite_files_rejects_unread_partitions(spark, tmp_path):
         tbl.rewrite_files(stray, replace=base_files)
 
 
-def test_concurrent_safe_compaction_overlaps_ingest(spark, tmp_path):
-    """Engine-level overlap: compact(concurrent_safe=True) runs in a
+def test_compaction_overlaps_ingest(spark, tmp_path):
+    """Engine-level overlap: compact() runs in a
     background thread WHILE merge batches keep applying to the same
     buckets. The compaction must commit (not abort), and the final
     read state must equal a replay with no compaction at all."""
@@ -566,7 +606,7 @@ def test_concurrent_safe_compaction_overlaps_ingest(spark, tmp_path):
 
     def compactor():
         try:
-            compacted.extend(eng.compact(concurrent_safe=True))
+            compacted.extend(eng.compact())
         except Exception as e:  # noqa: BLE001
             errs.append(e)
 
@@ -587,6 +627,49 @@ def test_concurrent_safe_compaction_overlaps_ingest(spark, tmp_path):
         .collect()
     )
     assert got == expect
+
+
+def test_compaction_rebases_over_append_landing_mid_fold(spark, tmp_path):
+    """Deterministic form of the overlap: a merge batch commits to the
+    compacted buckets after the fold read its snapshot and before the
+    compaction commits. The compaction rebases over it — the batch's
+    files stay live — instead of aborting, and the state equals a
+    replay with no compaction."""
+    from pyspark.sql import functions as F
+
+    from radiant_portal_pipeline_spark.cdc.feed import synthetic_feed
+    from radiant_portal_pipeline_spark.cdc.merge import TranscriptMergeEngine
+
+    feed = synthetic_feed(spark, 6000, dup_frac=0.05).localCheckpoint(eager=True)
+    batches = [feed.filter(F.col("commit_epoch") == e) for e in range(3)]
+
+    def engine(name):
+        t = TranscriptMergeEngine.create_table(
+            spark, str(tmp_path / name), num_buckets=4
+        )
+        return TranscriptMergeEngine(t, num_buckets=4)
+
+    ref = engine("ref")
+    for ep, b in enumerate(batches):
+        ref.merge_batch(b, epoch=ep)
+
+    eng = engine("t")
+    eng.merge_batch(batches[0], epoch=0)
+    eng.merge_batch(batches[1], epoch=1)
+    ingest = TranscriptMergeEngine(LakeTable(spark, eng.table.path), num_buckets=4)
+    fold = eng._dedup_and_layout
+
+    def fold_then_ingest(*args, **kwargs):
+        out = fold(*args, **kwargs)
+        ingest.merge_batch(batches[2], epoch=2)
+        return out
+
+    eng._dedup_and_layout = fold_then_ingest
+    assert eng.compact()
+    assert set(ingest.table.last_commit_files) <= set(eng.table.live_files())
+    assert sorted(map(tuple, eng.current_state().collect())) == sorted(
+        map(tuple, ref.current_state().collect())
+    )
 
 
 def test_s3_delete_param_validation_fallback():

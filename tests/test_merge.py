@@ -9,6 +9,8 @@ from radiant_portal_pipeline_spark.cdc import TranscriptMergeEngine, lww_dedup
 from radiant_portal_pipeline_spark.cdc.feed import feed_from_events
 from radiant_portal_pipeline_spark.cdc.schemas import CHANGE_EVENT_SCHEMA
 
+from conftest import pin_plan
+
 TS = dt.datetime(2024, 1, 1, 0, 0, 0)
 
 
@@ -43,7 +45,7 @@ def test_lww_dedup_agg_matches_window(spark):
     ]
     df = _batch(spark, rows)
     a = lww_dedup(df, ["conv_id", "turn_idx"], ["lsn"])
-    b = lww_dedup(df, ["conv_id", "turn_idx"], ["lsn"], use_window=True)
+    b = lww_dedup(df, ["conv_id", "turn_idx"], ["lsn"], via="window")
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
     got = {(r["conv_id"], r["turn_idx"]): r["lsn"] for r in a.collect()}
     assert got == {("c1", 0): 5, ("c1", 1): 1, ("c2", 0): 9}
@@ -60,7 +62,7 @@ def test_lww_dedup_strategies_agree_with_verbatim_dups(spark):
     args = (feed, ["conv_id", "turn_idx"], ["lsn"])
     am = lww_dedup(*args, via="argmax")
     ms = lww_dedup(*args, via="max_struct")
-    win = lww_dedup(*args, use_window=True)
+    win = lww_dedup(*args, via="window")
     assert am.columns == feed.columns
     rows_am = sorted(map(tuple, am.collect()))
     assert rows_am == sorted(map(tuple, ms.collect()))
@@ -383,23 +385,15 @@ def test_rescale_abort_is_self_cleaning(spark, tmp_path):
 
 
 def test_rescale_carries_engine_settings(spark, tmp_path):
-    """The rescaled engine keeps every engine setting: a pinned
-    broadcast bound stays pinned, and a batch with a NULL key still
-    goes to the dead-letter table instead of failing."""
+    """The rescaled engine keeps every engine setting: a batch with a
+    NULL key still goes to the dead-letter table instead of failing."""
     tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=4)
     q = TranscriptMergeEngine.create_quarantine_table(spark, str(tmp_path / "q"))
-    eng = TranscriptMergeEngine(
-        tbl,
-        quarantine=q,
-        broadcast_max_winners=0,
-        compact_broadcast_min_bytes=1,
-    )
+    eng = TranscriptMergeEngine(tbl, quarantine=q)
     eng.merge_batch(_batch(spark, [_ev("c1", 0, "U", 1, "a")]), epoch=0)
 
     eng8 = eng.rescale(str(tmp_path / "t8"), new_buckets=8)
     assert eng8.num_buckets == 8
-    assert eng8.broadcast_max_winners == 0
-    assert eng8.compact_broadcast_min_bytes == 1
     assert eng8.quarantine is q
     batch = _batch(
         spark, [_ev("c2", 0, "U", 2, "good"), _ev("c3", 0, "U", 3, "bad-key")]
@@ -426,7 +420,7 @@ def test_legacy_plans_execute_on_map_payload(spark, tmp_path):
         .withColumn("attrs", F.create_map(F.lit("k"), F.col("role")))
         .localCheckpoint(eager=True)
     )
-    ref = lww_dedup(feed, ["conv_id", "turn_idx"], ["lsn"], use_window=True)
+    ref = lww_dedup(feed, ["conv_id", "turn_idx"], ["lsn"], via="window")
 
     def by_key(df):
         return {
@@ -490,7 +484,7 @@ def test_append_only_reads_equal_deduped_merge(spark, tmp_path):
         tbl = TranscriptMergeEngine.create_table(
             spark, str(tmp_path / name), num_buckets=8
         )
-        eng = TranscriptMergeEngine(tbl, num_buckets=8, merge_plan=plan)
+        eng = pin_plan(TranscriptMergeEngine(tbl, num_buckets=8), plan)
         for e in range(2):
             eng.merge_batch(
                 feed.filter(F.col("commit_epoch") % 2 == e), epoch=e
@@ -505,20 +499,12 @@ def test_append_only_reads_equal_deduped_merge(spark, tmp_path):
     # the elided table holds MORE physical rows until compaction
     # (intra-batch losers + verbatim replays retained)...
     assert ao.table.read().count() > am.table.read().count()
-    # ...and compact() folds BOTH to one row per key, regardless of the
-    # engine's default plan
+    # ...and compact() folds BOTH to one row per key, whatever plan the
+    # batches were written with
     ao.compact()
     am.compact()
     assert ao.table.read().count() == am.table.read().count()
     assert sorted(map(tuple, ao.current_state().collect())) == got
-
-
-def test_append_only_rejected_for_cow(spark, tmp_path):
-    tbl = TranscriptMergeEngine.create_table(
-        spark, str(tmp_path / "t"), num_buckets=4
-    )
-    with pytest.raises(ValueError, match="append_only"):
-        TranscriptMergeEngine(tbl, mode="cow", merge_plan="append_only")
 
 
 def test_append_only_lineage_counts_per_key(spark, tmp_path):
@@ -529,8 +515,8 @@ def test_append_only_lineage_counts_per_key(spark, tmp_path):
 
     tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=4)
     lineage = LineageWriter(spark, str(tmp_path / "lin"))
-    eng = TranscriptMergeEngine(
-        tbl, num_buckets=4, merge_plan="append_only", lineage=lineage
+    eng = pin_plan(
+        TranscriptMergeEngine(tbl, num_buckets=4, lineage=lineage), "append_only"
     )
     # key (c1,0): two update rows (a dup to fold); key (c2,0): update
     # then delete (must count ONLY as deleted); key (c3,0): one insert
@@ -583,7 +569,7 @@ def test_cow_argmax_lsn_overflow_raises(spark, tmp_path):
     """The CoW ordering fold lsn*2+src_rank is only order-preserving
     below 2^62 — the contract is enforced in the plan, not assumed."""
     tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=4)
-    eng = TranscriptMergeEngine(tbl, mode="cow", merge_plan="argmax")
+    eng = TranscriptMergeEngine(tbl, mode="cow")
     ok = _batch(spark, [_ev("c1", 0, "U", 10, "fine")])
     eng.merge_batch(ok, epoch=0)
     bad = _batch(spark, [_ev("c1", 0, "U", 1 << 62, "boom")])
@@ -608,7 +594,7 @@ def test_adaptive_never_elides_on_hot_key_duplicate_batches(spark, tmp_path):
     batches with insert batches must NEVER choose append_only on the
     duplicate batches (and still keeps the elision for the inserts)."""
     tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=8)
-    eng = TranscriptMergeEngine(tbl, num_buckets=8, merge_plan="adaptive")
+    eng = TranscriptMergeEngine(tbl, num_buckets=8)
     lsn = 0
     for e in range(6):
         if e % 2 == 0:  # insert batch: every key exactly once
@@ -642,7 +628,9 @@ def test_argmax_broadcast_equals_shuffled_and_chooser_picks_it(spark, tmp_path):
         tbl = TranscriptMergeEngine.create_table(
             spark, str(tmp_path / name), num_buckets=8
         )
-        eng = TranscriptMergeEngine(tbl, num_buckets=8, merge_plan=plan)
+        eng = TranscriptMergeEngine(tbl, num_buckets=8)
+        if plan is not None:
+            pin_plan(eng, plan)
         stats = []
         for e in range(2):
             stats.append(
@@ -652,7 +640,7 @@ def test_argmax_broadcast_equals_shuffled_and_chooser_picks_it(spark, tmp_path):
 
     bc, _ = replay("argmax_broadcast", "bc")
     sh, _ = replay("argmax", "sh")
-    ad, ad_stats = replay("adaptive", "ad")
+    ad, ad_stats = replay(None, "ad")  # the engine's own choice
     want = sorted(map(tuple, sh.current_state().collect()))
     assert sorted(map(tuple, bc.current_state().collect())) == want
     assert sorted(map(tuple, ad.current_state().collect())) == want
@@ -704,36 +692,3 @@ def test_quarantine_dead_letters_instead_of_failing(spark, tmp_path):
     eng2 = TranscriptMergeEngine(tbl2, num_buckets=4)
     with pytest.raises(Exception, match="NULL"):
         eng2.merge_batch(batch, epoch=0)
-
-
-def test_compact_broadcast_upgrade_gated_by_fold_size(spark, tmp_path):
-    """compact() runs the broadcast-upgrade estimator only when the
-    manifest-recorded fold size clears compact_broadcast_min_bytes:
-    tiny folds keep the estimator-free shuffled plan (the extra job
-    measurably loses there), large update-shaped folds get the
-    broadcast semi join. Results are identical either way."""
-    from radiant_portal_pipeline_spark.cdc.feed import synthetic_feed
-
-    feed = synthetic_feed(spark, 20_000, n_convs=97)
-
-    def build(name, min_bytes):
-        tbl = TranscriptMergeEngine.create_table(
-            spark, str(tmp_path / name), num_buckets=4
-        )
-        eng = TranscriptMergeEngine(
-            tbl, num_buckets=4, compact_broadcast_min_bytes=min_bytes
-        )
-        eng.merge_batch(feed, epoch=0)
-        calls = []
-        orig = eng._estimate_batch
-        eng._estimate_batch = lambda df: (calls.append(1), orig(df))[1]
-        eng.compact()
-        return eng, len(calls)
-
-    small_gate, n_small = build("small", 1 << 40)  # gate far above fold size
-    big_gate, n_big = build("big", 0)  # gate at zero: always estimate
-    assert n_small == 0, "sub-threshold fold must skip the estimator"
-    assert n_big == 1, "cleared threshold must run the estimator once"
-    a = sorted(map(tuple, small_gate.current_state().collect()))
-    b = sorted(map(tuple, big_gate.current_state().collect()))
-    assert a == b and a, "plan choice must never change the folded state"

@@ -17,6 +17,8 @@ from radiant_portal_pipeline_spark.operators.registry import REGISTRY, load_tabl
 import radiant_portal_pipeline_spark.operators.relational  # noqa: F401
 import radiant_portal_pipeline_spark.operators.relational2  # noqa: F401
 
+from conftest import pin_plan
+
 
 def plan_of(df, mode="formatted") -> str:
     buf = io.StringIO()
@@ -50,13 +52,12 @@ def test_filter_and_projection_pushdown(spark, sf_smoke):
     assert "l_orderkey" in read_schema and "l_extendedprice" not in read_schema
 
 
-def _bare_engine(merge_plan: str):
+def _bare_engine(plan: str):
     eng = TranscriptMergeEngine.__new__(TranscriptMergeEngine)
     eng.num_buckets = 16
     eng.key_cols = ["conv_id", "turn_idx"]
     eng.lsn_col = "lsn"
-    eng.merge_plan = merge_plan
-    return eng
+    return pin_plan(eng, plan)
 
 
 def test_top1_window_vs_agg_same_result_different_plan(spark, sf_smoke):
@@ -66,7 +67,7 @@ def test_top1_window_vs_agg_same_result_different_plan(spark, sf_smoke):
 
     feed = synthetic_feed(spark, 2000)
     agg = lww_dedup(feed, ["conv_id", "turn_idx"], ["lsn"])
-    win = lww_dedup(feed, ["conv_id", "turn_idx"], ["lsn"], use_window=True)
+    win = lww_dedup(feed, ["conv_id", "turn_idx"], ["lsn"], via="window")
     assert "Window" in plan_of(win, "simple")
     assert "Window" not in plan_of(agg, "simple")
     assert sorted(map(tuple, agg.collect())) == sorted(map(tuple, win.collect()))
@@ -181,13 +182,14 @@ def test_merge_prepare_argmax_is_all_hash(spark):
     assert plan.count("HashAggregate") >= 4, plan  # winners p+f, distinct p+f
 
 
-def test_adaptive_plan_selection(spark, tmp_path):
+def test_adaptive_plan_selection(spark, tmp_path, monkeypatch):
     """The adaptive default resolves per batch: update-heavy batches
     (duplicate keys to fold) take the sort-free argmax plan —
     broadcast variant when the estimated winners set fits, shuffled
     otherwise; insert-dominant batches (~no duplicate keys) elide the
     write-path dedup entirely (append_only — MoR read-side LWW makes
     it equivalent). The choice lands in MergeStats and lineage."""
+    from radiant_portal_pipeline_spark.cdc import merge
     from radiant_portal_pipeline_spark.cdc.lineage import LineageWriter
 
     p = spark.sparkContext.defaultParallelism
@@ -196,7 +198,7 @@ def test_adaptive_plan_selection(spark, tmp_path):
         spark, str(tmp_path / "t"), num_buckets=buckets
     )
     lineage = LineageWriter(spark, str(tmp_path / "lin"))
-    eng = TranscriptMergeEngine(tbl, lineage=lineage)  # adaptive default
+    eng = TranscriptMergeEngine(tbl, lineage=lineage)
 
     hot = synthetic_feed(spark, 30_000, hot_every=2)  # 50% to one conv
     st_hot = eng.merge_batch(hot, epoch=0)
@@ -215,8 +217,8 @@ def test_adaptive_plan_selection(spark, tmp_path):
 
     # winners bound 0 -> the shuffled argmax (update-heavy batch whose
     # winners set exceeds what any executor should hold)
-    eng_sh = TranscriptMergeEngine(tbl, broadcast_max_winners=0)
-    plan, reason = eng_sh._choose_plan(_slim_for_chooser(eng_sh, hot))
+    monkeypatch.setattr(merge, "_BROADCAST_MAX_WINNERS", 0)
+    plan, reason = eng._choose_plan(_slim_for_chooser(eng, hot))
     assert plan == "argmax", (plan, reason)
 
 

@@ -12,6 +12,8 @@ from radiant_portal_pipeline_spark.cdc.stream import (
 )
 from radiant_portal_pipeline_spark.lake import LakeTable
 
+from conftest import pin_plan
+
 
 def _final(engine):
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "lsn"]
@@ -144,7 +146,7 @@ def test_lineage_describes_committed_bytes(spark, tmp_path, plan):
     feed = synthetic_feed(spark, 4000, n_convs=97, dup_frac=0.05)
     tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=4)
     lineage = LineageWriter(spark, str(tmp_path / "lin"))
-    eng = TranscriptMergeEngine(tbl, merge_plan=plan, lineage=lineage)
+    eng = pin_plan(TranscriptMergeEngine(tbl, lineage=lineage), plan)
     for epoch in range(2):
         before = set(tbl.live_files())
         eng.merge_batch(feed.filter(F.col("commit_epoch") == epoch).filter(keep()), epoch)
