@@ -66,15 +66,14 @@ def argmax_eligible(df: DataFrame, keys: Sequence[str], order_cols: Sequence[str
     return not _has_map_type(df)
 
 
-def argmax_winner_rows(
-    df: DataFrame, keys: Sequence[str], order: str, broadcast: bool = False
-) -> DataFrame:
-    """The argmax core: hash-aggregate ``max(order)`` per key, then a
-    shuffled-hash LEFT SEMI join selects the winning rows. The result
-    may still contain VERBATIM copies of a winner (at-least-once
-    replay) — callers must follow with a distinct; ``lww_dedup`` does
-    so directly, the merge engine after its layout repartition so the
-    distinct's exchange elides against the bucket partitioning.
+def argmax_winner_rows(df: DataFrame, keys: Sequence[str], order: str) -> DataFrame:
+    """The argmax core of ``lww_dedup(via="argmax")``: hash-aggregate
+    ``max(order)`` per key, then a shuffled-hash LEFT SEMI join selects
+    the winning rows. The result may still contain VERBATIM copies of a
+    winner (at-least-once replay), so ``lww_dedup`` follows it with a
+    distinct. The merge engine does not use it: its writes dedup with
+    the window plan inside each bucket (``TranscriptMergeEngine
+    ._lww_layout``).
 
     NULL-SAFE equality: a plain equi-join would let Catalyst infer
     isnotnull() on every join key and push it below the join, silently
@@ -90,13 +89,6 @@ def argmax_winner_rows(
     plan keeps. A raise_error guard on the (thin) winners side fails
     the query with a clear message instead; callers with possibly
     all-NULL order keys should use ``via="max_struct"``.
-
-    ``broadcast=True`` ships the winners to every task instead of
-    shuffling the full rows: the semi join becomes a BroadcastHashJoin
-    and the batch side moves through ZERO exchanges. Correct whenever
-    the deduped key count is small relative to the batch (the
-    update-heavy CDC case); callers must bound the winners size (the
-    merge engine's adaptive chooser bounds it with an HLL estimate).
     """
     keys = list(keys)
     winners = df.select(*keys, order).groupBy(*keys).agg(F.max(order).alias(order))
@@ -115,8 +107,6 @@ def argmax_winner_rows(
     for c in [*keys, order]:
         eq = F.col(f"_l.{c}").eqNullSafe(F.col(f"_r.{c}"))
         cond = eq if cond is None else (cond & eq)
-    if broadcast:
-        return lhs.join(F.broadcast(rhs), cond, "left_semi")
     return lhs.join(rhs.hint("SHUFFLE_HASH"), cond, "left_semi")
 
 

@@ -40,9 +40,8 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("rows_updated", T.LongType(), True),
         T.StructField("rows_deleted", T.LongType(), True),
         T.StructField("merge_ms", T.DoubleType(), True),
-        # resolved physical merge plan + the adaptive chooser's reason,
-        # e.g. "argmax_broadcast(dup_share~0.5012, est_keys~5970<=2000000)"
-        # — the audit trail for per-batch plan selection (SURVEY ST9)
+        # the merge's LWW operator (MergeStats.plan, "lww_window");
+        # older rows hold the per-batch plan choice of earlier engines
         T.StructField("plan", T.StringType(), True),
         # which change source produced the batch — the tombstone-GC
         # low-watermark takes the MIN across sources of each source's
@@ -76,8 +75,8 @@ class LineageWriter:
         """Append watermarks + I/U/D counts for the touched partitions.
 
         ``prepared_batch`` holds the batch's rows as committed (part,
-        key, lsn and tombstone columns); several rows of one key — an
-        un-deduped ``append_only`` commit — fold LWW to one. The
+        key, lsn and tombstone columns); the per-key fold below also
+        takes several rows of one key, keeping the highest lsn's op. The
         pre-image is the sink's PRIOR snapshot version of the touched
         buckets. One exchange: both sides are repartitioned by bucket,
         the per-key and per-bucket aggregations reuse that partitioning,

@@ -10,13 +10,11 @@ Semantics (the reference's incremental protocol, re-expressed Spark-first
    (reference: ``ingested_at`` watermark advanced only post-run,
    sequencing_experiment_update.sql:1-3 + import_part.py:588-622).
 2. **LWW dedup** — the winning ``lsn`` per ``(conv_id, turn_idx)``
-   (reference W1 row_number pattern) as a hash aggregate with map-side
-   partial combine, so hot conversations reduce before the shuffle,
-   then a semi join back to the winning rows. The engine picks the
-   plan per batch from what it observes — ``append_only``,
-   ``argmax_broadcast`` or shuffled ``argmax`` (see ``_choose_plan``,
-   which no setting overrides); argmax-ineligible schemas take
-   ``FALLBACK_PLAN``. ``compact()`` folds with shuffled ``argmax``.
+   by the reference's W1 pattern, ``ROW_NUMBER() OVER (PARTITION BY
+   key ORDER BY lsn DESC) = 1``, run inside each bucket right after
+   the write's layout exchange (``_lww_layout``). One operator serves
+   every batch and schema, the CoW fold, ``compact()`` and MoR state
+   reads; there is no plan to choose and no job before the write.
 3. **Partition pruning** — ``part = pmod(xxhash64(conv_id), buckets)``;
    only partitions present in the batch are touched.
 4. **Deletes** become tombstones (``_deleted = true``) that keep their
@@ -44,10 +42,12 @@ Two physical strategies (same logical semantics, verified equal):
   (this is the reference's copy-unchanged + swap,
   operator.py:282-355, with the copy made free by the manifest).
 
-Scale notes: the only shuffles are the LWW hash aggregation and the
-write repartition by bucket; both are keyed on the hashed conversation
-id so they stay balanced under conversation skew. Bucket count should
-scale with cluster size (32 by default; thousands at 1000 executors).
+Scale notes: the only shuffle of a write is the repartition by
+bucket, and the LWW window sorts each bucket inside its task. The whole
+batch crosses that exchange before the dedup, and a hot conversation's
+rows all sort in its bucket's task (spilling if they outgrow memory).
+Bucket count should scale with cluster size (32 by default; thousands
+at 1000 executors).
 """
 
 from __future__ import annotations
@@ -64,14 +64,6 @@ from radiant_portal_pipeline_spark.lake import LakeTable
 
 _SRC_RANK = "_src_rank"  # tie-break: batch row beats existing row at equal lsn
 
-# adaptive chooser constants (see _choose_plan)
-_DUP_SHARE_THRESHOLD = 0.03  # below: insert-dominant batch -> append_only
-_BROADCAST_MAX_WINNERS = 2_000_000  # est. winners above: shuffled argmax
-_CHOOSER_RSD = 0.02  # HLL relative error of the distinct-key estimate
-# plan label for schemas the argmax plans cannot serve (map payloads,
-# multi-column ordering): lww_dedup(via="auto") + layout repartition
-FALLBACK_PLAN = "fallback"
-
 
 @dataclass
 class MergeStats:
@@ -80,7 +72,7 @@ class MergeStats:
     parts_touched: int = 0
     parts: list = None
     seconds: float = 0.0
-    plan: str = ""  # physical plan _choose_plan picked for this batch
+    plan: str = "lww_window"  # every batch runs the one LWW operator, _lww_layout
 
 
 def part_expr(conv_col: str, num_buckets: int):
@@ -197,131 +189,28 @@ class TranscriptMergeEngine:
 
     # ------------------------------------------------------------------
 
-    def _choose_plan(self, df: DataFrame) -> tuple[str, str]:
-        """Pick the physical plan for ONE batch — the only place a merge
-        plan is chosen. Returns (plan, reason) — the reason goes to
-        lineage so operators can audit choices.
+    def _lww_layout(self, df: DataFrame, order_cols: list[str]) -> DataFrame:
+        """The one LWW operator of the MoR write, the CoW fold,
+        ``compact()`` and ``raw_state``: the layout exchange
+        ``repartition(num_buckets, part)``, then the reference's
+        ``ROW_NUMBER() OVER (PARTITION BY part, keys ORDER BY order_cols
+        DESC) = 1``. Every key lives in
+        exactly one bucket, so the bucket partitioning already clusters
+        the window by (part, keys): it plans no exchange of its own, and
+        the whole operator is one exchange and one in-partition sort,
+        for every schema (map payloads included) and any number of
+        order columns. Equal-order rows must be verbatim duplicates
+        (``dedup.py``'s tie contract), so any one of them may win."""
+        laid = df.repartition(self.num_buckets, F.col(S.PART_COL))
+        return lww_dedup(laid, [S.PART_COL, *self.key_cols], order_cols, via="window")
 
-        Schemas the argmax plans cannot serve (map payload columns)
-        take ``FALLBACK_PLAN``. Every other batch takes an argmax plan:
-        measured (BENCH.md plan table), argmax dominates the max-struct
-        plans at every (parallelism, skew, dup-ratio) cell — it is
-        all-hash (a struct aggregation buffer forces SortAggregate),
-        its winners exchange carries only keys+lsn with a map-side
-        partial combine, and its full-row exchange is keyed on
-        (keys, lsn) — unique per row, so a hot conversation spreads
-        uniformly with no salting.
+    def _prepare_batch(self, batch: DataFrame) -> DataFrame:
+        """Fold op -> tombstone flag, add bucket, then LWW-dedup and lay
+        out for the partitioned write in one pass (``_lww_layout``).
 
-        Under MoR one FULL-COVERAGE estimator job decides between the
-        argmax variants: n rows + HLL distinct keys (approx_count_distinct
-        over xxhash64(keys) at rsd=_CHOOSER_RSD — map-side partial
-        sketches, one tiny exchange, a thin columnar scan; no key-wise
-        shuffle). HLL sees EVERY key, so duplicate mass concentrated in
-        a handful of hot keys is detected deterministically. Both
-        estimates are deterministic per batch content, so replays
-        choose the same plan.
-
-        - dup_share < _DUP_SHARE_THRESHOLD (insert-dominant) ->
-          append_only: skip the write-path dedup entirely. MoR
-          read-side LWW + compaction already guarantee the same read
-          results; eliding measures ~40% faster on a 16M-row
-          all-new-keys batch (BENCH.md). A wrong borderline guess costs
-          bounded storage until compact, never correctness.
-        - est distinct keys <= _BROADCAST_MAX_WINNERS ->
-          argmax_broadcast: the winners (keys+lsn) ship to every task
-          and the batch's FULL ROWS move through ZERO exchanges before
-          the layout repartition.
-        - else -> shuffled argmax (winners too big to broadcast).
-
-        CoW folds the batch with every existing key of the touched
-        buckets, so batch-scale estimates do not apply: shuffled argmax.
-        """
-        from radiant_portal_pipeline_spark.cdc.dedup import argmax_eligible
-
-        if not argmax_eligible(df, [S.PART_COL, *self.key_cols], [self.lsn_col]):
-            return FALLBACK_PLAN, "argmax_ineligible"
-        if self.mode == "mor":
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.approx_count_distinct(
-                    F.xxhash64(*self.key_cols), _CHOOSER_RSD
-                ).alias("nk"),
-            ).head()
-            if row["n"]:
-                dup_share = max(0.0, 1.0 - row["nk"] / row["n"])
-                if dup_share < _DUP_SHARE_THRESHOLD:
-                    return (
-                        "append_only",
-                        f"dup_share~{dup_share:.4f}<"
-                        f"{_DUP_SHARE_THRESHOLD} (insert-dominant)",
-                    )
-                if row["nk"] <= _BROADCAST_MAX_WINNERS:
-                    return (
-                        "argmax_broadcast",
-                        f"dup_share~{dup_share:.4f}, est_keys~{row['nk']}"
-                        f"<={_BROADCAST_MAX_WINNERS}",
-                    )
-                return "argmax", f"est_keys~{row['nk']}>{_BROADCAST_MAX_WINNERS}"
-        return "argmax", "argmax_eligible"
-
-    def _dedup_and_layout(
-        self, df: DataFrame, keys, order_cols, plan: str
-    ) -> DataFrame:
-        """LWW + write layout for ``plan`` (one of _choose_plan's).
-
-        ``argmax``: hash-agg max(lsn) per key
-        (exchange carries keys+lsn ONLY, map-side partial combine),
-        shuffled-hash LEFT SEMI join back (full-row exchange keyed on
-        keys+lsn — unique per row, so hot conversations spread
-        uniformly), partition-local distinct for verbatim replays (its
-        exchange elides under the subset rule), then repartition the
-        deduped output by bucket for the write. Zero sorts.
-
-        ``argmax_broadcast``: the same with the winners broadcast, so
-        the semi join is a BroadcastHashJoin and the batch's full rows
-        reach the layout repartition through no exchange at all.
-
-        ``append_only`` (MoR only): no write-path dedup; read-side LWW
-        resolves duplicates and ``compact()`` folds them.
-
-        ``FALLBACK_PLAN`` (argmax-ineligible schemas): ``lww_dedup``
-        with ``via="auto"`` — max-struct for orderable payloads, the
-        window plan for map-bearing ones — then the layout
-        repartition."""
-        if plan == "append_only":
-            return df.repartition(self.num_buckets, F.col(S.PART_COL))
-        if plan in ("argmax", "argmax_broadcast"):
-            from radiant_portal_pipeline_spark.cdc.dedup import argmax_winner_rows
-
-            # layout repartition BETWEEN the semi join and the verbatim-
-            # replay distinct: the distinct's ClusteredDistribution is
-            # then satisfied by hashpartitioning(part) (subset rule), so
-            # it runs partition-local with NO exchange of its own — the
-            # null-safe join's coalesce-keyed output partitioning would
-            # otherwise force one. In the broadcast variant the semi
-            # join is a BroadcastHashJoin, so the batch's full rows
-            # reach this repartition WITHOUT any prior exchange — and
-            # the repartition itself carries only the already-deduped
-            # winners, typically a small fraction of the raw batch.
-            rows = argmax_winner_rows(
-                df, keys, order_cols[0], broadcast=(plan == "argmax_broadcast")
-            )
-            laid = rows.repartition(self.num_buckets, F.col(S.PART_COL))
-            return laid.dropDuplicates().select(*df.columns)
-        deduped = lww_dedup(df, keys, order_cols)
-        return deduped.repartition(self.num_buckets, F.col(S.PART_COL))
-
-    def _prepare_batch(self, batch: DataFrame) -> tuple[DataFrame, str, str]:
-        """LWW-dedup the batch, fold op -> tombstone flag, add bucket,
-        lay out for the partitioned write (see _dedup_and_layout).
-        Returns (prepared, plan, reason) — plan and reason are
-        ``_choose_plan``'s pick for this batch.
-
-        The envelope is slimmed BEFORE the aggregation: ``op`` folds to
-        the 1-byte tombstone flag and ``commit_epoch`` is dropped
-        up-front, so neither travels through the aggregation exchange
-        (they used to ride both exchanges and be dropped at the end —
-        dead bytes on the wire, and exchange bytes are the scaling
+        The envelope is slimmed BEFORE the exchange: ``op`` folds to the
+        1-byte tombstone flag and ``commit_epoch`` is dropped up-front,
+        so neither travels through it (exchange bytes are the scaling
         ceiling on a memory-bandwidth-bound node)."""
         # data contract: merge keys and lsn must be non-null. Enforced
         # inside the plan (raise_error branch) — no extra pass; the
@@ -344,11 +233,7 @@ class TranscriptMergeEngine:
             .withColumn(S.DELETED_COL, (F.col("op") == F.lit("D")))
             .drop("op", "commit_epoch")
         )
-        plan, reason = self._choose_plan(slim)
-        deduped = self._dedup_and_layout(
-            slim, [S.PART_COL, *self.key_cols], [self.lsn_col], plan=plan
-        )
-        return deduped, plan, reason
+        return self._lww_layout(slim, [self.lsn_col])
 
     def merge_batch(self, batch: DataFrame, epoch: int) -> MergeStats:
         """Apply one micro-batch under ``epoch`` (a replayed epoch is a
@@ -360,7 +245,7 @@ class TranscriptMergeEngine:
 
         if self.quarantine is not None:
             batch = self._split_quarantine(batch, epoch)
-        prepared, plan, plan_reason = self._prepare_batch(batch)
+        prepared = self._prepare_batch(batch)
 
         if self.mode == "mor":
             # append-only write path: no existing data read or rewritten;
@@ -375,16 +260,14 @@ class TranscriptMergeEngine:
                 parts_touched=len(parts),
                 parts=parts,
                 seconds=time.time() - t0,
-                plan=plan,
             )
             if self.lineage is not None and not stats.skipped:
                 # lineage reads the commit's own delta files back, so it
-                # describes exactly the committed bytes (un-deduped under
-                # append_only; record() counts per key either way)
+                # describes exactly the committed bytes
                 committed = self.table.read_files(
                     self.table.last_commit_files, result.schema
                 )
-                self._record_lineage(stats, committed, snap.version, plan_reason)
+                self._record_lineage(stats, committed, snap.version)
             return stats
 
         # ---- copy-on-write: fused union + LWW over touched buckets
@@ -396,50 +279,14 @@ class TranscriptMergeEngine:
                 prepared, source_id=self.source_id, epoch=epoch
             )
             return MergeStats(
-                epoch=epoch,
-                skipped=result is None,
-                seconds=time.time() - t0,
-                plan=plan,
+                epoch=epoch, skipped=result is None, seconds=time.time() - t0
             )
 
         existing = self.table.read(partitions=parts, version=snap.version)
         src = prepared.withColumn(_SRC_RANK, F.lit(1))
         tgt = existing.withColumn(_SRC_RANK, F.lit(0))
         unioned = src.unionByName(tgt, allowMissingColumns=True)
-        if plan == "argmax":
-            # fold the (lsn, src_rank) ordering into ONE bigint so the
-            # argmax plan stays eligible (it needs a single order
-            # column): batch beats existing at equal lsn. The fold is
-            # only order-preserving while lsn < 2^62 (a WAL/binlog
-            # offset is far below) — ENFORCED in the plan, not assumed:
-            # an overflowing lsn fails the batch instead of silently
-            # electing the wrong winner.
-            folded = F.when(
-                F.col(self.lsn_col) < F.lit(1 << 62),
-                F.col(self.lsn_col) * 2 + F.col(_SRC_RANK),
-            ).otherwise(
-                F.raise_error(
-                    F.lit(
-                        f"CoW argmax ordering fold requires "
-                        f"{self.lsn_col} < 2^62; the batch carries a "
-                        f"larger offset"
-                    )
-                ).cast("bigint")
-            )
-            unioned = unioned.withColumn("_ord", folded)
-            merged = self._dedup_and_layout(
-                unioned.drop(_SRC_RANK),
-                [S.PART_COL, *self.key_cols],
-                ["_ord"],
-                plan=plan,
-            ).drop("_ord")
-        else:
-            merged = self._dedup_and_layout(
-                unioned,
-                [S.PART_COL, *self.key_cols],
-                [self.lsn_col, _SRC_RANK],
-                plan=plan,
-            ).drop(_SRC_RANK)
+        merged = self._lww_layout(unioned, [self.lsn_col, _SRC_RANK]).drop(_SRC_RANK)
         result = self.table.overwrite_partitions(
             merged,
             source_id=self.source_id,
@@ -454,14 +301,11 @@ class TranscriptMergeEngine:
             parts_touched=len(parts),
             parts=parts,
             seconds=time.time() - t0,
-            plan=plan,
         )
-        self._record_lineage(stats, prepared, snap.version, plan_reason)
+        self._record_lineage(stats, prepared, snap.version)
         return stats
 
-    def _record_lineage(
-        self, stats: MergeStats, prepared, prior_version: int, plan_reason: str = ""
-    ):
+    def _record_lineage(self, stats: MergeStats, prepared, prior_version: int):
         if self.lineage is None or stats.skipped or not stats.parts:
             return
         # the pre-image for the insert/update split is the PRIOR
@@ -476,7 +320,7 @@ class TranscriptMergeEngine:
             prior_version=prior_version,
             key_cols=self.key_cols,
             lsn_col=self.lsn_col,
-            plan=(f"{stats.plan}({plan_reason})" if plan_reason else stats.plan),
+            plan=stats.plan,
             source_id=self.source_id,
         )
 
@@ -532,9 +376,8 @@ class TranscriptMergeEngine:
         partition-scoped rewrites, never a full-table pass. Returns the
         list of partitions actually compacted.
 
-        The fold runs the shuffled ``argmax`` (``FALLBACK_PLAN`` for
-        argmax-ineligible schemas) — never ``append_only``, folding is
-        compaction's whole purpose. Every compaction commits
+        The fold is the write path's LWW operator (``_lww_layout``)
+        over the pinned files. Every compaction commits
         FILE-scoped through ``LakeTable.rewrite_files`` (Iceberg's
         RewriteFiles): only the exact input files of the pinned
         snapshot are swapped for the folded output, so an ingest batch
@@ -544,8 +387,6 @@ class TranscriptMergeEngine:
         Folding a subset of a partition's files is valid under MoR
         because reads LWW-merge files anyway; only a concurrent REWRITE
         of the same files aborts (two compactors)."""
-        from radiant_portal_pipeline_spark.cdc.dedup import argmax_eligible
-
         snap = self.table.snapshot()  # pin what we fold
         if partitions is not None:
             parts = list(partitions)
@@ -562,11 +403,7 @@ class TranscriptMergeEngine:
         if not parts:
             return []
         fold_in = self.table.read(partitions=parts, version=snap.version)
-        keys = [S.PART_COL, *self.key_cols]
-        eligible = argmax_eligible(fold_in, keys, [self.lsn_col])
-        folded = self._dedup_and_layout(
-            fold_in, keys, [self.lsn_col], "argmax" if eligible else FALLBACK_PLAN
-        )
+        folded = self._lww_layout(fold_in, [self.lsn_col])
         if purge_tombstones_below is not None:
             folded = folded.filter(
                 ~(
@@ -665,13 +502,14 @@ class TranscriptMergeEngine:
         prune and pin the scan like ``LakeTable.read``; ``since_lsn``
         skips files by their manifest lsn range and keeps only rows with
         lsn > ``since_lsn`` BEFORE the LWW (so a key's winner is its
-        newest change after the watermark)."""
+        newest change after the watermark). The LWW is the write path's
+        operator (``_lww_layout``), one exchange for the whole read."""
         skip = None if since_lsn is None else {self.lsn_col: (since_lsn + 1, None)}
         df = self.table.read(partitions=partitions, version=version, skip=skip)
         if since_lsn is not None:
             df = df.filter(F.col(self.lsn_col) > since_lsn)
         if self.mode == "mor":
-            df = lww_dedup(df, self.key_cols, [self.lsn_col])
+            df = self._lww_layout(df, [self.lsn_col])
         return df
 
     def applied_lsn_watermarks(self) -> DataFrame:

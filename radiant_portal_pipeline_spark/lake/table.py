@@ -977,21 +977,6 @@ class LakeTable:
 
     # ------------------------------------------------------- maintenance
 
-    def add_columns(self, fields: list[T.StructField]) -> Snapshot:
-        """ALTER TABLE ADD COLUMNS (additive only)."""
-
-        def mutate(snap: Snapshot):
-            names = set(snap.schema.fieldNames())
-            out = list(snap.schema.fields)
-            for f in fields:
-                if f.name not in names:
-                    out.append(T.StructField(f.name, f.dataType, nullable=True))
-            return {"schema": T.StructType(out)}
-
-        snap = self._commit(mutate)
-        assert snap is not None
-        return snap
-
     def carry_applied(self, applied: dict[str, int]) -> Snapshot:
         """Adopt per-source applied-epoch watermarks (table migration /
         rescale: the NEW table must refuse exactly the epochs the old

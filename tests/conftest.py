@@ -34,10 +34,3 @@ def sf_smoke():
 def sf_correct():
     return SF_CORRECT
 
-
-def pin_plan(engine, plan: str):
-    """Pin one engine's merge plan for a test. The engine has no plan
-    setting — ``_choose_plan`` is the only way a plan gets picked — so
-    this shadows it on the instance."""
-    engine._choose_plan = lambda df: (plan, "pinned")
-    return engine

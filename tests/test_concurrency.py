@@ -657,14 +657,14 @@ def test_compaction_rebases_over_append_landing_mid_fold(spark, tmp_path):
     eng.merge_batch(batches[0], epoch=0)
     eng.merge_batch(batches[1], epoch=1)
     ingest = TranscriptMergeEngine(LakeTable(spark, eng.table.path), num_buckets=4)
-    fold = eng._dedup_and_layout
+    fold = eng._lww_layout
 
     def fold_then_ingest(*args, **kwargs):
         out = fold(*args, **kwargs)
         ingest.merge_batch(batches[2], epoch=2)
         return out
 
-    eng._dedup_and_layout = fold_then_ingest
+    eng._lww_layout = fold_then_ingest
     assert eng.compact()
     assert set(ingest.table.last_commit_files) <= set(eng.table.live_files())
     assert sorted(map(tuple, eng.current_state().collect())) == sorted(

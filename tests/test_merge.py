@@ -9,8 +9,6 @@ from radiant_portal_pipeline_spark.cdc import TranscriptMergeEngine, lww_dedup
 from radiant_portal_pipeline_spark.cdc.feed import feed_from_events
 from radiant_portal_pipeline_spark.cdc.schemas import CHANGE_EVENT_SCHEMA
 
-from conftest import pin_plan
-
 TS = dt.datetime(2024, 1, 1, 0, 0, 0)
 
 
@@ -405,15 +403,14 @@ def test_rescale_carries_engine_settings(spark, tmp_path):
     }
 
 
-def test_legacy_plans_execute_on_map_payload(spark, tmp_path):
-    """A map payload makes a batch argmax-ineligible (maps can't be
-    grouping keys or be ordered inside a max-struct). Such batches
-    must merge through the fallback plan in BOTH modes — the CoW fold
-    adds a second order column on top — and read back equal to the
-    window-plan parity reference."""
+def test_map_payload_merges_in_both_modes(spark, tmp_path):
+    """A map payload can be neither a grouping key nor ordered inside a
+    max-struct; the merge's window operator never compares payloads, so
+    such batches merge in BOTH modes (the CoW fold adds a second order
+    column on top) and read back equal to the window-plan parity
+    reference, under the one plan label."""
     from radiant_portal_pipeline_spark.cdc.feed import synthetic_feed
     from radiant_portal_pipeline_spark.cdc.lineage import LineageWriter
-    from radiant_portal_pipeline_spark.cdc.merge import FALLBACK_PLAN
 
     feed = (
         synthetic_feed(spark, 2000, n_convs=23, dup_frac=0.05)
@@ -438,10 +435,10 @@ def test_legacy_plans_execute_on_map_payload(spark, tmp_path):
         eng = TranscriptMergeEngine(tbl, mode=mode, lineage=lineage)
         for e in range(2):
             st = eng.merge_batch(feed.filter(F.col("commit_epoch") % 2 == e), epoch=e)
-            assert st.plan == FALLBACK_PLAN, (mode, st.plan)
+            assert st.plan == "lww_window", (mode, st.plan)
         assert by_key(eng.current_state()) == want, mode
         plans = {r["plan"] for r in lineage.read().select("plan").collect()}
-        assert plans == {f"{FALLBACK_PLAN}(argmax_ineligible)"}, (mode, plans)
+        assert plans == {"lww_window"}, (mode, plans)
 
 
 def test_nested_map_detection(spark):
@@ -467,57 +464,15 @@ def test_nested_map_detection(spark):
     assert lww_dedup(wrapped, ["conv_id", "turn_idx"], ["lsn"]).count() == 1
 
 
-def test_append_only_reads_equal_deduped_merge(spark, tmp_path):
-    """Write-path dedup elision (append_only) must be READ-equivalent
-    to a folding merge: MoR read-side LWW resolves cross-batch updates,
-    intra-batch duplicates, verbatim replays and deletes identically —
-    the elision trades bounded storage until compact(), never results."""
-    from pyspark.sql import functions as F
-
-    from radiant_portal_pipeline_spark.cdc.feed import synthetic_feed
-
-    feed = synthetic_feed(
-        spark, 20_000, n_convs=97, dup_frac=0.05
-    ).localCheckpoint(eager=True)  # update-heavy + verbatim replays
-
-    def replay(plan, name):
-        tbl = TranscriptMergeEngine.create_table(
-            spark, str(tmp_path / name), num_buckets=8
-        )
-        eng = pin_plan(TranscriptMergeEngine(tbl, num_buckets=8), plan)
-        for e in range(2):
-            eng.merge_batch(
-                feed.filter(F.col("commit_epoch") % 2 == e), epoch=e
-            )
-        return eng
-
-    ao = replay("append_only", "ao")
-    am = replay("argmax", "am")
-    got = sorted(map(tuple, ao.current_state().collect()))
-    assert got == sorted(map(tuple, am.current_state().collect()))
-    assert len(got) > 0
-    # the elided table holds MORE physical rows until compaction
-    # (intra-batch losers + verbatim replays retained)...
-    assert ao.table.read().count() > am.table.read().count()
-    # ...and compact() folds BOTH to one row per key, whatever plan the
-    # batches were written with
-    ao.compact()
-    am.compact()
-    assert ao.table.read().count() == am.table.read().count()
-    assert sorted(map(tuple, ao.current_state().collect())) == got
-
-
-def test_append_only_lineage_counts_per_key(spark, tmp_path):
-    """Lineage I/U/D counts are per KEY even when the write path
-    elides dedup (append_only writes raw rows; lineage folds the
-    committed rows per key — round-3 review finding)."""
+def test_lineage_counts_per_key_with_intra_batch_duplicates(spark, tmp_path):
+    """Lineage I/U/D counts are per KEY when a batch carries several
+    rows of one key: an update folded with its predecessor counts once,
+    and an update followed by a delete counts only as deleted."""
     from radiant_portal_pipeline_spark.cdc.lineage import LineageWriter
 
     tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=4)
     lineage = LineageWriter(spark, str(tmp_path / "lin"))
-    eng = pin_plan(
-        TranscriptMergeEngine(tbl, num_buckets=4, lineage=lineage), "append_only"
-    )
+    eng = TranscriptMergeEngine(tbl, num_buckets=4, lineage=lineage)
     # key (c1,0): two update rows (a dup to fold); key (c2,0): update
     # then delete (must count ONLY as deleted); key (c3,0): one insert
     eng.merge_batch(
@@ -565,16 +520,26 @@ def test_argmax_all_null_order_raises(spark):
     assert got.count() == 2  # one row per key, NULL-order key included
 
 
-def test_cow_argmax_lsn_overflow_raises(spark, tmp_path):
-    """The CoW ordering fold lsn*2+src_rank is only order-preserving
-    below 2^62 — the contract is enforced in the plan, not assumed."""
+def test_cow_extreme_lsn_elects_right_winner(spark, tmp_path):
+    """CoW orders the fold by (lsn, batch-beats-existing) directly, so
+    an lsn at 2^62 or 2^63-1 elects the right winner, and at equal lsn
+    the batch row beats the existing row."""
+    top = (1 << 63) - 1
     tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=4)
     eng = TranscriptMergeEngine(tbl, mode="cow")
-    ok = _batch(spark, [_ev("c1", 0, "U", 10, "fine")])
-    eng.merge_batch(ok, epoch=0)
-    bad = _batch(spark, [_ev("c1", 0, "U", 1 << 62, "boom")])
-    with pytest.raises(Exception, match="2\\^62"):
-        eng.merge_batch(bad, epoch=1)
+    steps = [
+        ([_ev("c1", 0, "U", 10, "a"), _ev("c2", 0, "U", top, "keep")],
+         {"c1": ("a", 10), "c2": ("keep", top)}),
+        ([_ev("c1", 0, "U", 1 << 62, "b"), _ev("c2", 0, "U", 1 << 62, "stale")],
+         {"c1": ("b", 1 << 62), "c2": ("keep", top)}),
+        ([_ev("c1", 0, "U", top, "c")], {"c1": ("c", top), "c2": ("keep", top)}),
+        ([_ev("c1", 0, "U", top, "tie"), _ev("c2", 0, "U", top, "tie")],
+         {"c1": ("tie", top), "c2": ("tie", top)}),
+    ]
+    for epoch, (rows, want) in enumerate(steps):
+        eng.merge_batch(_batch(spark, rows), epoch=epoch)
+        got = {conv: v for (conv, _), v in state(eng).items()}
+        assert got == want, (epoch, got)
 
 
 def _keyed_batch(spark, rows_per_key: dict[tuple[str, int], int], lsn0: int):
@@ -586,69 +551,23 @@ def _keyed_batch(spark, rows_per_key: dict[tuple[str, int], int], lsn0: int):
     return _batch(spark, rows)
 
 
-def test_adaptive_never_elides_on_hot_key_duplicate_batches(spark, tmp_path):
-    """Round-3 blind spot, closed: duplicate mass concentrated in a
-    HANDFUL of keys was caught w.p. ~2%/batch by the key-hash sample,
-    so such batches elided dedup on most batches. The full-coverage
-    HLL estimator sees every key: a feed alternating hot-key-duplicate
-    batches with insert batches must NEVER choose append_only on the
-    duplicate batches (and still keeps the elision for the inserts)."""
+def test_mor_commit_holds_one_row_per_key(spark, tmp_path):
+    """Every MoR commit is deduped: the files one merge_batch writes
+    hold exactly one row per (part, conv_id, turn_idx), for an
+    insert-dominant batch with a few duplicate keys as for a batch
+    whose duplicates sit on a handful of hot keys."""
     tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=8)
     eng = TranscriptMergeEngine(tbl, num_buckets=8)
-    lsn = 0
-    for e in range(6):
-        if e % 2 == 0:  # insert batch: every key exactly once
-            batch = _keyed_batch(
-                spark, {(f"c{e}-{i}", 0): 1 for i in range(2000)}, lsn
-            )
-        else:  # duplicate batch: 3 hot keys carry ~95% of the rows
-            spec = {(f"hot-{j}", 0): 650 for j in range(3)}
-            spec.update({(f"d{e}-{i}", 0): 1 for i in range(100)})
-            batch = _keyed_batch(spark, spec, lsn)
-        lsn += 10_000
-        stats = eng.merge_batch(batch, epoch=e)
-        if e % 2 == 0:
-            assert stats.plan == "append_only", (e, stats.plan)
-        else:
-            assert stats.plan != "append_only", (e, stats.plan)
-
-
-def test_argmax_broadcast_equals_shuffled_and_chooser_picks_it(spark, tmp_path):
-    """The broadcast semi-join variant (zero full-row exchanges) must
-    be result-identical to the shuffled argmax, and the adaptive
-    chooser must resolve to it for an update-heavy batch whose key
-    count fits the broadcast bound."""
-    from radiant_portal_pipeline_spark.cdc.feed import synthetic_feed
-
-    feed = synthetic_feed(spark, 20_000, n_convs=97, dup_frac=0.05).localCheckpoint(
-        eager=True
-    )
-
-    def replay(plan, name):
-        tbl = TranscriptMergeEngine.create_table(
-            spark, str(tmp_path / name), num_buckets=8
-        )
-        eng = TranscriptMergeEngine(tbl, num_buckets=8)
-        if plan is not None:
-            pin_plan(eng, plan)
-        stats = []
-        for e in range(2):
-            stats.append(
-                eng.merge_batch(feed.filter(F.col("commit_epoch") % 2 == e), epoch=e)
-            )
-        return eng, stats
-
-    bc, _ = replay("argmax_broadcast", "bc")
-    sh, _ = replay("argmax", "sh")
-    ad, ad_stats = replay(None, "ad")  # the engine's own choice
-    want = sorted(map(tuple, sh.current_state().collect()))
-    assert sorted(map(tuple, bc.current_state().collect())) == want
-    assert sorted(map(tuple, ad.current_state().collect())) == want
-    # ~97 convs x 50 turns over 10k rows/batch -> heavy duplication,
-    # small winners: the chooser must take the broadcast path
-    assert all(s.plan == "argmax_broadcast" for s in ad_stats), [
-        s.plan for s in ad_stats
-    ]
+    insert_dominant = {(f"c-{i}", 0): 1 for i in range(2000)}
+    insert_dominant.update({(f"dup-{i}", 0): 2 for i in range(20)})
+    hot = {(f"hot-{j}", 0): 650 for j in range(3)}
+    hot.update({(f"d-{i}", 0): 1 for i in range(100)})
+    for epoch, spec in enumerate([insert_dominant, hot]):
+        eng.merge_batch(_keyed_batch(spark, spec, lsn0=epoch * 10_000), epoch=epoch)
+        committed = tbl.read_files(tbl.last_commit_files, tbl.snapshot().schema)
+        per_key = committed.groupBy("part", "conv_id", "turn_idx").count()
+        assert per_key.count() == len(spec), epoch
+        assert per_key.agg(F.max("count")).head()[0] == 1, epoch
 
 
 def test_quarantine_dead_letters_instead_of_failing(spark, tmp_path):

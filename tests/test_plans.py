@@ -17,8 +17,6 @@ from radiant_portal_pipeline_spark.operators.registry import REGISTRY, load_tabl
 import radiant_portal_pipeline_spark.operators.relational  # noqa: F401
 import radiant_portal_pipeline_spark.operators.relational2  # noqa: F401
 
-from conftest import pin_plan
-
 
 def plan_of(df, mode="formatted") -> str:
     buf = io.StringIO()
@@ -52,12 +50,12 @@ def test_filter_and_projection_pushdown(spark, sf_smoke):
     assert "l_orderkey" in read_schema and "l_extendedprice" not in read_schema
 
 
-def _bare_engine(plan: str):
+def _bare_engine():
     eng = TranscriptMergeEngine.__new__(TranscriptMergeEngine)
     eng.num_buckets = 16
     eng.key_cols = ["conv_id", "turn_idx"]
     eng.lsn_col = "lsn"
-    return pin_plan(eng, plan)
+    return eng
 
 
 def test_top1_window_vs_agg_same_result_different_plan(spark, sf_smoke):
@@ -166,129 +164,51 @@ def test_aqe_splits_skewed_join_partition(spark):
                 spark.conf.set(k, v)
 
 
-def test_merge_prepare_argmax_is_all_hash(spark):
-    """The argmax plan's whole point: NO sort anywhere (max-struct
-    aggregation buffers force SortAggregate; argmax is hash-agg +
-    shuffled-hash semi join + elided-exchange distinct). The winners
-    aggregation must still get its map-side partial combine."""
-    feed = synthetic_feed(spark, 1000)
-    plan = plan_of(
-        TranscriptMergeEngine._prepare_batch(_bare_engine("argmax"), feed)[0],
-        mode="simple",
-    )
-    assert "SortAggregate" not in plan, plan
-    assert "Sort " not in plan, plan
-    assert "ShuffledHashJoin" in plan, plan
-    assert plan.count("HashAggregate") >= 4, plan  # winners p+f, distinct p+f
-
-
-def test_adaptive_plan_selection(spark, tmp_path, monkeypatch):
-    """The adaptive default resolves per batch: update-heavy batches
-    (duplicate keys to fold) take the sort-free argmax plan —
-    broadcast variant when the estimated winners set fits, shuffled
-    otherwise; insert-dominant batches (~no duplicate keys) elide the
-    write-path dedup entirely (append_only — MoR read-side LWW makes
-    it equivalent). The choice lands in MergeStats and lineage."""
-    from radiant_portal_pipeline_spark.cdc import merge
-    from radiant_portal_pipeline_spark.cdc.lineage import LineageWriter
-
-    p = spark.sparkContext.defaultParallelism
-    buckets = max(64, 2 * p)
-    tbl = TranscriptMergeEngine.create_table(
-        spark, str(tmp_path / "t"), num_buckets=buckets
-    )
-    lineage = LineageWriter(spark, str(tmp_path / "lin"))
-    eng = TranscriptMergeEngine(tbl, lineage=lineage)
-
-    hot = synthetic_feed(spark, 30_000, hot_every=2)  # 50% to one conv
-    st_hot = eng.merge_batch(hot, epoch=0)
-    assert st_hot.plan == "argmax_broadcast", st_hot  # small winners set
-
-    uniform = synthetic_feed(spark, 30_000, n_convs=5000, hot_every=10**9)
-    st_uni = eng.merge_batch(uniform, epoch=1)
-    assert st_uni.plan == "append_only", st_uni
-
-    plans = {
-        r["batch_id"]: r["plan"]
-        for r in lineage.read().select("batch_id", "plan").distinct().collect()
-    }
-    assert plans[0].startswith("argmax_broadcast(")
-    assert plans[1].startswith("append_only(")
-
-    # winners bound 0 -> the shuffled argmax (update-heavy batch whose
-    # winners set exceeds what any executor should hold)
-    monkeypatch.setattr(merge, "_BROADCAST_MAX_WINNERS", 0)
-    plan, reason = eng._choose_plan(_slim_for_chooser(eng, hot))
-    assert plan == "argmax", (plan, reason)
-
-
-def _slim_for_chooser(eng, feed):
-    from radiant_portal_pipeline_spark.cdc import schemas as S
-    from radiant_portal_pipeline_spark.cdc.merge import part_expr
-
-    return (
-        feed.withColumn(S.PART_COL, part_expr("conv_id", eng.num_buckets))
-        .withColumn(S.DELETED_COL, F.col("op") == F.lit("D"))
-        .drop("op", "commit_epoch")
-    )
-
-
 def _with_map_payload(feed):
-    """An argmax-INeligible batch: map-typed payload columns can't be
-    grouping keys for the distinct, so adaptive must take the fallback
-    plan."""
-    return feed.withColumn(
-        "attrs", F.create_map(F.lit("k"), F.col("role"))
+    """A map payload can be neither a grouping key nor ordered inside a
+    max-struct, so no aggregate-based argmax plan can fold it."""
+    return feed.withColumn("attrs", F.create_map(F.lit("k"), F.col("role")))
+
+
+def _assert_one_bucket_exchange(batch):
+    """The merge's one LWW operator: the layout exchange (hash on
+    ``part``) is the ONLY shuffle, and the row_number window runs
+    inside it with no exchange of its own."""
+    plan = plan_of(
+        TranscriptMergeEngine._prepare_batch(_bare_engine(), batch), mode="simple"
     )
+    assert plan.count("Exchange") == 1, plan
+    assert "Exchange hashpartitioning(part#" in plan, plan
+    assert "Window [row_number()" in plan, plan
+    return plan
 
 
-def test_adaptive_fallback_chooser_on_ineligible_schema(spark, tmp_path):
-    """Argmax-ineligible batches resolve to the one fixed fallback
-    label, whatever their skew, with no estimator job."""
-    from radiant_portal_pipeline_spark.cdc import schemas as S
-    from radiant_portal_pipeline_spark.cdc.merge import FALLBACK_PLAN, part_expr
-
-    p = spark.sparkContext.defaultParallelism
-    buckets = max(64, 2 * p)
-    tbl = TranscriptMergeEngine.create_table(
-        spark, str(tmp_path / "t"), num_buckets=buckets
-    )
-    eng = TranscriptMergeEngine(tbl, num_buckets=buckets)
-
-    def slim(feed):
-        return _with_map_payload(feed).withColumn(
-            S.PART_COL, part_expr("conv_id", buckets)
-        )
-
-    hot = slim(synthetic_feed(spark, 30_000, hot_every=2))  # 50% to one conv
-    plan, reason = eng._choose_plan(hot)
-    assert (plan, reason) == (FALLBACK_PLAN, "argmax_ineligible")
-
-    uniform = slim(synthetic_feed(spark, 30_000, n_convs=5000, hot_every=10**9))
-    plan, reason = eng._choose_plan(uniform)
-    assert (plan, reason) == (FALLBACK_PLAN, "argmax_ineligible")
+def test_merge_prepare_argmax_is_all_hash(spark):
+    """The per-key argmax is a row_number pick inside the layout's hash
+    exchange: every exchange in the plan is the hash one on ``part``,
+    and no aggregate (hash or sort) is planned."""
+    plan = _assert_one_bucket_exchange(synthetic_feed(spark, 1000))
+    assert "Aggregate" not in plan, plan
 
 
 def test_merge_prepare_argmax_broadcast_zero_fullrow_exchanges(spark):
-    """The broadcast variant's whole point: the batch's FULL rows reach
-    the layout repartition through a BroadcastHashJoin — the only
-    full-row exchange left is the (already-deduped) layout
-    repartition. The winners aggregation keeps its partial combine."""
-    feed = synthetic_feed(spark, 1000)
-    plan = plan_of(
-        TranscriptMergeEngine._prepare_batch(
-            _bare_engine("argmax_broadcast"), feed
-        )[0],
-        mode="simple",
-    )
-    assert "BroadcastHashJoin" in plan, plan
-    assert "LeftSemi" in plan, plan
-    assert "SortAggregate" not in plan, plan
-    assert "ShuffledHashJoin" not in plan, plan
-    # exactly ONE row-bearing exchange: the layout repartition (the
-    # winners aggregation's exchange + broadcast exchange carry only
-    # keys+lsn)
-    assert plan.count("Exchange hashpartitioning") == 2, plan  # winners + layout
+    """The batch's full rows cross exactly one exchange, the layout
+    repartition; no winners set is built, broadcast or joined back."""
+    plan = _assert_one_bucket_exchange(synthetic_feed(spark, 1000))
+    assert "Broadcast" not in plan, plan
+    assert "Join" not in plan, plan
+
+
+def test_adaptive_fallback_chooser_on_ineligible_schema(spark):
+    """A map-payload batch takes the same one plan as any other batch,
+    whatever its skew: there is no fallback and no chooser."""
+    for feed in (
+        synthetic_feed(spark, 30_000, hot_every=2),  # 50% to one conv
+        synthetic_feed(spark, 30_000, n_convs=5000, hot_every=10**9),
+    ):
+        plan = _assert_one_bucket_exchange(_with_map_payload(feed))
+        assert "Aggregate" not in plan, plan
+        assert "Broadcast" not in plan, plan
 
 
 def test_range_bin_join_shuffles_on_key_and_bin(spark):

@@ -12,8 +12,6 @@ from radiant_portal_pipeline_spark.cdc.stream import (
 )
 from radiant_portal_pipeline_spark.lake import LakeTable
 
-from conftest import pin_plan
-
 
 def _final(engine):
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "lsn"]
@@ -131,8 +129,17 @@ def test_lineage_iud_counts_exact(spark, tmp_path, mode):
     assert agg[1] == (1, 1, 1)
 
 
-@pytest.mark.parametrize("plan", ["argmax_broadcast", "append_only"])
-def test_lineage_describes_committed_bytes(spark, tmp_path, plan):
+# The batch shapes are named after the write plans that once served
+# them: an insert-dominant batch (~no duplicate keys) and an update-heavy
+# batch with a hot key. Both now run the one LWW operator.
+_COMMITTED_BYTES_FEEDS = {
+    "append_only": dict(n_convs=5000, hot_every=10**9),
+    "argmax_broadcast": dict(n_convs=97, dup_frac=0.05, hot_every=2),
+}
+
+
+@pytest.mark.parametrize("shape", list(_COMMITTED_BYTES_FEEDS))
+def test_lineage_describes_committed_bytes(spark, tmp_path, shape):
     """A non-deterministic batch (every evaluation keeps a different
     random subset) must be counted as COMMITTED: the batch's lineage
     I+U+D equals the number of keys in the files that batch wrote.
@@ -143,10 +150,10 @@ def test_lineage_describes_committed_bytes(spark, tmp_path, plan):
     from radiant_portal_pipeline_spark.cdc.feed import synthetic_feed
 
     keep = F.udf(lambda: random.random() < 0.5, "boolean").asNondeterministic()
-    feed = synthetic_feed(spark, 4000, n_convs=97, dup_frac=0.05)
+    feed = synthetic_feed(spark, 4000, **_COMMITTED_BYTES_FEEDS[shape])
     tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=4)
     lineage = LineageWriter(spark, str(tmp_path / "lin"))
-    eng = pin_plan(TranscriptMergeEngine(tbl, lineage=lineage), plan)
+    eng = TranscriptMergeEngine(tbl, lineage=lineage)
     for epoch in range(2):
         before = set(tbl.live_files())
         eng.merge_batch(feed.filter(F.col("commit_epoch") == epoch).filter(keep()), epoch)
