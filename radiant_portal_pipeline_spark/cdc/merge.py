@@ -22,8 +22,9 @@ Semantics (the reference's incremental protocol, re-expressed Spark-first
    resurrect a deleted key (reference ST3/ST7).
 5. **Additive schema evolution** — new payload columns in the batch are
    appended to the table schema before the merge (reference §1.2).
-6. **Lineage** — per-partition applied-LSN watermarks, row counts and
-   merge latency (reference ST2 / OTel spans).
+6. **Lineage** — per-partition applied-LSN watermarks, I/U/D row
+   counts and merge latency, one lineage-table row per touched bucket
+   and batch (``cdc.lineage.LineageWriter``; reference ST2 / OTel spans).
 
 Two physical strategies (same logical semantics, verified equal):
 
@@ -202,7 +203,7 @@ class TranscriptMergeEngine:
         order columns. Equal-order rows must be verbatim duplicates
         (``dedup.py``'s tie contract), so any one of them may win."""
         laid = df.repartition(self.num_buckets, F.col(S.PART_COL))
-        return lww_dedup(laid, [S.PART_COL, *self.key_cols], order_cols, via="window")
+        return lww_dedup(laid, [S.PART_COL, *self.key_cols], order_cols)
 
     def _prepare_batch(self, batch: DataFrame) -> DataFrame:
         """Fold op -> tombstone flag, add bucket, then LWW-dedup and lay
@@ -511,17 +512,3 @@ class TranscriptMergeEngine:
         if self.mode == "mor":
             df = self._lww_layout(df, [self.lsn_col])
         return df
-
-    def applied_lsn_watermarks(self) -> DataFrame:
-        """Per-partition applied-LSN watermark (lineage view)."""
-        return (
-            self.raw_state()
-            .groupBy(S.PART_COL)
-            .agg(
-                F.max(self.lsn_col).alias("applied_lsn"),
-                F.sum(F.when(F.col(S.DELETED_COL), 1).otherwise(0)).alias(
-                    "tombstones"
-                ),
-                F.count(F.lit(1)).alias("rows_total"),
-            )
-        )

@@ -58,10 +58,10 @@ def cdc_feed_derivation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cdc_lww_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1 through the public ``lww_dedup``: the sort-free argmax LWW
-    plan (hash-agg max(lsn) on a slim exchange + shuffled-hash semi
-    join + elided distinct — skew-safe via the per-row-unique join
-    key), vs the oracle's row_number window."""
+    """W1 through the public ``lww_dedup``: the reference's row_number
+    window per (conv_id, turn_idx), newest lsn first, keeping row 1 —
+    the plan the merge engine runs inside each bucket — vs the
+    oracle's row_number window."""
     feed = feed_from_events(spark, sf_dir)
     return lww_dedup(feed, ["conv_id", "turn_idx"], ["lsn"]).select(
         "conv_id", "turn_idx", "op", "lsn", "text"

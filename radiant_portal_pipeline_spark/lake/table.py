@@ -41,6 +41,7 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import random
@@ -50,6 +51,7 @@ import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _LOG_DIR = "_log"
@@ -140,10 +142,8 @@ class PosixCommitProtocol(CommitProtocol):
         os.remove(target)
 
     def age_seconds(self, target: str) -> float | None:
-        import time as _time
-
         try:
-            return _time.time() - os.path.getmtime(target)
+            return time.time() - os.path.getmtime(target)
         except OSError:
             return None
 
@@ -179,10 +179,8 @@ class InMemoryCommitProtocol(CommitProtocol):
         with self._lock:
             if target in self._store:
                 raise FileExistsError(target)
-            import time as _time
-
             self._store[target] = bytes(data)
-            self._published_at[target] = _time.time()
+            self._published_at[target] = time.time()
 
     def read(self, target: str) -> str:
         with self._lock:  # consistent point-in-time GET
@@ -212,11 +210,9 @@ class InMemoryCommitProtocol(CommitProtocol):
             self._published_at.pop(target, None)
 
     def age_seconds(self, target: str) -> float | None:
-        import time as _time
-
         with self._lock:
             t = self._published_at.get(target)
-        return None if t is None else _time.time() - t
+        return None if t is None else time.time() - t
 
 
 class ConcurrentModification(RuntimeError):
@@ -313,15 +309,6 @@ def _versions(path: str, protocol: "CommitProtocol | None" = None) -> list[int]:
     return sorted(out)
 
 
-def _encode_blob(content: dict) -> tuple[str, bytes]:
-    """(content-hash name, bytes) of a manifest blob: same content →
-    same name, so an untouched partition is never rewritten."""
-    import hashlib
-
-    data = json.dumps(content, sort_keys=True).encode()
-    return f"m-{hashlib.sha1(data).hexdigest()}.json", data
-
-
 class Snapshot:
     """A table version. The version file carries only
     ``refs: {partition -> blob name}`` (Iceberg's manifest list),
@@ -334,10 +321,8 @@ class Snapshot:
     ``files`` / ``stats`` materialize lazily (and fully) for consumers
     that want the whole map — the commit and pruned-read paths never do.
 
-    Version files written by earlier releases carry the whole inline
-    ``files``/``stats`` maps instead; ``from_json`` turns them into refs
-    whose blobs are held in ``pending`` until the next commit publishes
-    them.
+    Version files of the older inline layout (whole ``files``/``stats``
+    maps, no ``refs``) are not read: ``from_json`` rejects them.
     """
 
     def __init__(
@@ -349,7 +334,6 @@ class Snapshot:
         applied: dict[str, int] | None = None,
         properties: dict[str, Any] | None = None,
         blob_loader=None,
-        pending: dict[str, dict] | None = None,
     ):
         self.version = version
         self.schema = schema
@@ -358,14 +342,8 @@ class Snapshot:
         self.properties = properties or {}
         self.refs = refs
         self._blob_loader = blob_loader  # name -> {"files": [...], "stats": {...}}
-        # blobs named by refs but not yet published (legacy inline read)
-        self.pending = pending or {}
         self._files: dict[str, list[str]] | None = None
         self._stats: dict[str, dict[str, Any]] | None = None
-
-    def _blob(self, name: str) -> dict:
-        blob = self.pending.get(name)
-        return blob if blob is not None else self._blob_loader(name)
 
     # --- lazy full materialization
 
@@ -375,7 +353,7 @@ class Snapshot:
         files: dict[str, list[str]] = {}
         stats: dict[str, dict[str, Any]] = {}
         for pv, name in self.refs.items():
-            blob = self._blob(name)
+            blob = self._blob_loader(name)
             files[pv] = list(blob["files"])
             stats.update(blob.get("stats", {}))
         self._files, self._stats = files, stats
@@ -403,7 +381,7 @@ class Snapshot:
         name = self.refs.get(pv)
         if name is None:
             return [], {}
-        blob = self._blob(name)
+        blob = self._blob_loader(name)
         return list(blob["files"]), dict(blob.get("stats", {}))
 
     def partition_values(self) -> list[str]:
@@ -424,27 +402,33 @@ class Snapshot:
     @staticmethod
     def from_json(raw: str, blob_loader=None) -> "Snapshot":
         d = json.loads(raw)
-        refs, pending = d.get("refs"), {}
-        if refs is None:
-            # legacy inline layout: name each partition's blob exactly
-            # as _write_blob would and keep it in memory — reads never
-            # write; the next commit publishes the blobs it keeps
-            refs, stats = {}, d.get("stats", {})
-            for pv, fs in d.get("files", {}).items():
-                st = {f: stats[f] for f in fs if f in stats}
-                blob = {"files": list(fs), "stats": st}
-                refs[pv] = _encode_blob(blob)[0]
-                pending[refs[pv]] = blob
+        if "refs" not in d:
+            # outside input: a version file from another writer or an
+            # older release must fail by name, not with a bare KeyError
+            raise ValueError(
+                f"version {d.get('version')} has no 'refs': it is in the "
+                f"inline manifest layout (whole files/stats maps in the "
+                f"version file), which is no longer read"
+            )
         return Snapshot(
             version=d["version"],
             schema=T.StructType.fromJson(json.loads(d["schema"])),
             partition_col=d["partition_col"],
-            refs=refs,
+            refs=d["refs"],
             applied=d.get("applied", {}),
             properties=d.get("properties", {}),
             blob_loader=blob_loader,
-            pending=pending,
         )
+
+
+def _already_applied(snap: Snapshot, source_id: str | None, epoch: int | None) -> bool:
+    """The exactly-once guard: ``(source_id, epoch)`` is at or below the
+    snapshot's applied watermark for that source."""
+    return (
+        source_id is not None
+        and epoch is not None
+        and snap.applied.get(source_id, -1) >= epoch
+    )
 
 
 def _version_path(root: str, version: int) -> str:
@@ -476,8 +460,10 @@ class LakeTable:
 
     def _write_blob(self, content: dict) -> str:
         """Publish a content-addressed immutable manifest blob; return
-        its name."""
-        name, data = _encode_blob(content)
+        its name. Same content → same name, so an untouched partition
+        is never rewritten."""
+        data = json.dumps(content, sort_keys=True).encode()
+        name = f"m-{hashlib.sha1(data).hexdigest()}.json"
         target = self._manifest_path(name)
         os.makedirs(os.path.dirname(target), exist_ok=True)
         try:
@@ -663,8 +649,6 @@ class LakeTable:
         """
         commit_dir = f"commit-{uuid.uuid4().hex}"
         out = os.path.join(self.path, _DATA_DIR, commit_dir)
-        from pyspark.sql import functions as F
-
         # NULL partition values would land under Hive's
         # __HIVE_DEFAULT_PARTITION__ sentinel and become untargetable by
         # partition reads/replaces — reject them inside the plan.
@@ -719,11 +703,7 @@ class LakeTable:
         """
         for attempt in range(MAX_COMMIT_RETRIES):
             snap = self.snapshot()
-            if (
-                source_id is not None
-                and epoch is not None
-                and snap.applied.get(source_id, -1) >= epoch
-            ):
+            if _already_applied(snap, source_id, epoch):
                 return None
             nxt_parts = mutate(snap)
             # mutate may supply a full applied map (watermark adoption);
@@ -731,16 +711,11 @@ class LakeTable:
             applied = dict(nxt_parts.get("applied", snap.applied))
             if source_id is not None and epoch is not None:
                 applied[source_id] = epoch
-            refs = nxt_parts.get("refs", snap.refs)
-            # a legacy inline base holds its blobs in memory only: the
-            # ones this version keeps must exist before it points at them
-            for name in set(refs.values()) & snap.pending.keys():
-                self._write_blob(snap.pending[name])
             nxt = Snapshot(
                 version=snap.version + 1,
                 schema=nxt_parts["schema"],
                 partition_col=snap.partition_col,
-                refs=refs,
+                refs=nxt_parts.get("refs", snap.refs),
                 applied=applied,
                 properties=snap.properties,
                 blob_loader=self._load_blob,
@@ -785,8 +760,6 @@ class LakeTable:
     def _conform(self, df: DataFrame, schema: T.StructType) -> DataFrame:
         """Project df onto the table schema (missing columns -> NULL;
         coercible existing columns cast to the table's type)."""
-        from pyspark.sql import functions as F
-
         have = {f.name: f.dataType for f in df.schema.fields}
         cols = []
         for f in schema.fields:
@@ -798,6 +771,32 @@ class LakeTable:
                 cols.append(F.col(f.name))
         return df.select(*cols)
 
+    def _stage(
+        self,
+        df: DataFrame,
+        layout_ready: bool,
+        source_id: str | None = None,
+        epoch: int | None = None,
+        base_version: int | None = None,
+    ) -> tuple[Snapshot, dict[str, list[str]], dict[str, dict[str, Any]]] | None:
+        """The first half of every data commit: pin the base snapshot,
+        skip an already-applied ``(source_id, epoch)`` before the
+        (expensive) write, evolve the schema and write the conformed
+        data files. Returns ``(base snapshot, {partition -> files},
+        {file -> stats})``, or None when the epoch guard made the commit
+        a no-op."""
+        snap0 = self.snapshot(base_version)
+        if _already_applied(snap0, source_id, epoch):
+            return None
+        schema = self._evolved_schema(snap0, df)
+        new_files, new_stats = self._write_data_files(
+            self._conform(df, schema),
+            snap0.partition_col,
+            layout_ready=layout_ready,
+            stat_cols=snap0.properties.get("stats_cols"),
+        )
+        return snap0, new_files, new_stats
+
     def append(
         self,
         df: DataFrame,
@@ -807,20 +806,10 @@ class LakeTable:
     ) -> Snapshot | None:
         """Add files; existing partitions keep their files (fast path for
         immutable feeds). Schema evolves additively first."""
-        snap0 = self.snapshot()
-        if (
-            source_id is not None
-            and epoch is not None
-            and snap0.applied.get(source_id, -1) >= epoch
-        ):
-            return None  # already applied: skip the (expensive) write too
-        schema = self._evolved_schema(snap0, df)
-        new_files, new_stats = self._write_data_files(
-            self._conform(df, schema),
-            snap0.partition_col,
-            layout_ready=layout_ready,
-            stat_cols=snap0.properties.get("stats_cols"),
-        )
+        staged = self._stage(df, layout_ready, source_id, epoch)
+        if staged is None:
+            return None
+        _snap0, new_files, new_stats = staged
 
         def mutate(snap: Snapshot):
             entries = {}
@@ -857,20 +846,10 @@ class LakeTable:
         ABORTS with ConcurrentModification: the replacement lacks the
         concurrent files and silently rebasing would drop them.
         Disjoint-partition commits still rebase and land."""
-        snap0 = self.snapshot(base_version)
-        if (
-            source_id is not None
-            and epoch is not None
-            and snap0.applied.get(source_id, -1) >= epoch
-        ):
+        staged = self._stage(df, layout_ready, source_id, epoch, base_version)
+        if staged is None:
             return None
-        schema = self._evolved_schema(snap0, df)
-        new_files, new_stats = self._write_data_files(
-            self._conform(df, schema),
-            snap0.partition_col,
-            layout_ready=layout_ready,
-            stat_cols=snap0.properties.get("stats_cols"),
-        )
+        snap0, new_files, new_stats = staged
         replaced = set(new_files.keys()) | {str(p) for p in (also_replace or [])}
 
         # blob names are content hashes, so ref equality IS file-list
@@ -921,14 +900,7 @@ class LakeTable:
         fold produced no output (e.g. all rows tombstone-purged) simply
         loses its input files; one left with no files at all leaves the
         table, as in ``overwrite_partitions``."""
-        snap0 = self.snapshot()
-        schema = self._evolved_schema(snap0, df)
-        new_files, new_stats = self._write_data_files(
-            self._conform(df, schema),
-            snap0.partition_col,
-            layout_ready=layout_ready,
-            stat_cols=snap0.properties.get("stats_cols"),
-        )
+        _snap0, new_files, new_stats = self._stage(df, layout_ready)
         # normalize BEFORE the unknown-partition check: _write_data_files
         # returns directory-string keys, and callers may pass raw (e.g.
         # int) partition values in `replace`

@@ -254,49 +254,27 @@ def test_split_manifest_roundtrip_and_blob_reuse(spark, tmp_path):
         assert "refs" in raw and "files" not in raw, side
 
 
-def test_legacy_inline_version_reads_and_becomes_split_on_commit(spark, tmp_path):
+def test_inline_version_file_is_rejected_by_name(spark, tmp_path):
     """A version file in the old inline layout (whole files/stats maps,
-    no refs, no blobs on disk) stays readable, and the first commit on
-    top of it publishes the blobs its untouched partitions' refs name."""
+    no refs) is outside input the table no longer reads: opening it
+    fails with a ValueError that names the layout, not a KeyError."""
     import json
     import os
-    import shutil
 
     tbl = _split_tbl(spark, tmp_path)
-    tbl.append(_df(spark, [("a", 1, 0), ("b", 2, 1), ("c", 3, 2)]))
-    tbl.append(_df(spark, [("c2", 30, 2)]))
-    rows = {tuple(r) for r in tbl.read().collect()}
-    pruned = tbl.live_files(partitions=[2], skip={"v": (10, None)})
-    assert len(pruned) == 1 and len(tbl.live_files(partitions=[2])) == 2
+    tbl.append(_df(spark, [("a", 1, 0), ("b", 2, 1)]))
     snap = tbl.snapshot()
     raw = _latest_version_json(tbl.path)
     del raw["refs"]
     raw["files"], raw["stats"] = snap.files, snap.stats
-    vfile = os.path.join(tbl.path, "_log", f"v{snap.version:012d}.json")
-    with open(vfile, "w") as fh:
+    with open(os.path.join(tbl.path, "_log", f"v{snap.version:012d}.json"), "w") as fh:
         json.dump(raw, fh)
-    mdir = os.path.join(tbl.path, "_log", "manifests")
-    shutil.rmtree(mdir)
 
     fresh = LakeTable(spark, tbl.path)
-    assert {tuple(r) for r in fresh.read().collect()} == rows
-    assert fresh.live_files(partitions=[2], skip={"v": (10, None)}) == pruned
-    assert not os.path.exists(mdir)  # reads never write
-
-    fresh.append(_df(spark, [("d", 4, 0)]))
-    rows |= {("d", 4, 0)}
-    cold = LakeTable(spark, tbl.path)  # cold blob cache: every ref must exist
-    assert {tuple(r) for r in cold.read().collect()} == rows
-    for p in ("0", "1", "2"):
-        assert {r["k"] for r in cold.read(partitions=[p]).collect()} == {
-            k for k, _v, part in rows if str(part) == p
-        }
-    raw = _latest_version_json(tbl.path)
-    assert "refs" in raw and "files" not in raw and "stats" not in raw
-
-    cold.expire_snapshots(keep_last=1)
-    cold.vacuum(grace_seconds=0)
-    assert {tuple(r) for r in LakeTable(spark, tbl.path).read().collect()} == rows
+    with pytest.raises(ValueError, match="inline manifest layout"):
+        fresh.snapshot()
+    with pytest.raises(ValueError, match="inline manifest layout"):
+        fresh.read()
 
 
 def test_split_manifest_pruned_read_loads_only_needed_blobs(spark, tmp_path):

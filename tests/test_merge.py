@@ -34,6 +34,8 @@ def state(engine):
 
 
 def test_lww_dedup_agg_matches_window(spark):
+    """The window's winners equal an independent aggregate,
+    ``max(lsn)`` per key, and the hand-computed winners."""
     rows = [
         _ev("c1", 0, "U", 5, "new"),
         _ev("c1", 0, "U", 3, "old"),
@@ -43,45 +45,28 @@ def test_lww_dedup_agg_matches_window(spark):
     ]
     df = _batch(spark, rows)
     a = lww_dedup(df, ["conv_id", "turn_idx"], ["lsn"])
-    b = lww_dedup(df, ["conv_id", "turn_idx"], ["lsn"], via="window")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
     got = {(r["conv_id"], r["turn_idx"]): r["lsn"] for r in a.collect()}
+    agg = df.groupBy("conv_id", "turn_idx").agg(F.max("lsn").alias("lsn"))
+    assert got == {(r["conv_id"], r["turn_idx"]): r["lsn"] for r in agg.collect()}
     assert got == {("c1", 0): 5, ("c1", 1): 1, ("c2", 0): 9}
+    assert a.filter(F.col("conv_id") == "c2").head()["op"] == "D"
 
 
-def test_lww_dedup_strategies_agree_with_verbatim_dups(spark):
-    """argmax / max_struct / window must produce identical rows — the
-    whole-plan gate for swapping the default. Includes verbatim
-    duplicates (at-least-once replay: same key, same lsn, same payload)
-    which argmax collapses via its partition-local distinct."""
+def test_lww_dedup_verbatim_dups_one_row_per_key(spark):
+    """Verbatim duplicates (at-least-once replay: same key, same lsn,
+    same payload) collapse to one row per key, even where the winner
+    itself was replayed, and the winner is the key's max lsn."""
     from radiant_portal_pipeline_spark.cdc.feed import synthetic_feed
 
     feed = synthetic_feed(spark, 5_000, dup_frac=0.1)
-    args = (feed, ["conv_id", "turn_idx"], ["lsn"])
-    am = lww_dedup(*args, via="argmax")
-    ms = lww_dedup(*args, via="max_struct")
-    win = lww_dedup(*args, via="window")
-    assert am.columns == feed.columns
-    rows_am = sorted(map(tuple, am.collect()))
-    assert rows_am == sorted(map(tuple, ms.collect()))
-    assert rows_am == sorted(map(tuple, win.collect()))
-    # one row per key even where the winner itself was replayed verbatim
-    assert am.count() == am.select("conv_id", "turn_idx").distinct().count()
-
-
-def test_lww_argmax_rejects_ineligible_schema(spark):
-    import pytest
-    from pyspark.sql import functions as F
-
-    df = _batch(spark, [_ev("c1", 0, "U", 5, "x")]).withColumn(
-        "attrs", F.create_map(F.lit("k"), F.lit("v"))
+    out = lww_dedup(feed, ["conv_id", "turn_idx"], ["lsn"])
+    assert out.columns == feed.columns
+    assert feed.count() > feed.distinct().count()  # the feed does replay rows
+    assert out.count() == out.select("conv_id", "turn_idx").distinct().count()
+    want = feed.groupBy("conv_id", "turn_idx").agg(F.max("lsn").alias("lsn"))
+    assert sorted(map(tuple, out.select("conv_id", "turn_idx", "lsn").collect())) == (
+        sorted(map(tuple, want.collect()))
     )
-    with pytest.raises(ValueError, match="argmax"):
-        lww_dedup(df, ["conv_id", "turn_idx"], ["lsn"], via="argmax")
-    # auto silently falls back (to the window — neither hash plan can
-    # serve a map payload: maps can't be grouping keys or be ordered
-    # inside the max-struct)
-    assert lww_dedup(df, ["conv_id", "turn_idx"], ["lsn"]).count() == 1
 
 
 def test_merge_upsert_update_delete(engine, spark):
@@ -223,10 +208,10 @@ def test_lineage_watermarks(engine, spark):
         ),
         epoch=0,
     )
-    wm = {r["part"]: r for r in engine.applied_lsn_watermarks().collect()}
-    assert sum(r["rows_total"] for r in wm.values()) == 3
-    assert sum(r["tombstones"] for r in wm.values()) == 1
-    assert max(r["applied_lsn"] for r in wm.values()) == 3
+    rows = engine.raw_state().collect()  # tombstones included
+    assert len(rows) == 3
+    assert sum(r["_deleted"] for r in rows) == 1
+    assert max(r["lsn"] for r in rows) == 3
 
 
 def test_incremental_compaction_policy_bounds_files(spark, tmp_path):
@@ -404,11 +389,11 @@ def test_rescale_carries_engine_settings(spark, tmp_path):
 
 
 def test_map_payload_merges_in_both_modes(spark, tmp_path):
-    """A map payload can be neither a grouping key nor ordered inside a
-    max-struct; the merge's window operator never compares payloads, so
-    such batches merge in BOTH modes (the CoW fold adds a second order
-    column on top) and read back equal to the window-plan parity
-    reference, under the one plan label."""
+    """A map payload can be neither a grouping key nor ordered; the
+    merge's window operator never compares payloads, so such batches
+    merge in BOTH modes (the CoW fold adds a second order column on
+    top) and read back equal to the public ``lww_dedup`` of the feed,
+    under the one plan label."""
     from radiant_portal_pipeline_spark.cdc.feed import synthetic_feed
     from radiant_portal_pipeline_spark.cdc.lineage import LineageWriter
 
@@ -417,7 +402,7 @@ def test_map_payload_merges_in_both_modes(spark, tmp_path):
         .withColumn("attrs", F.create_map(F.lit("k"), F.col("role")))
         .localCheckpoint(eager=True)
     )
-    ref = lww_dedup(feed, ["conv_id", "turn_idx"], ["lsn"], via="window")
+    ref = lww_dedup(feed, ["conv_id", "turn_idx"], ["lsn"])
 
     def by_key(df):
         return {
@@ -442,26 +427,18 @@ def test_map_payload_merges_in_both_modes(spark, tmp_path):
 
 
 def test_nested_map_detection(spark):
-    """array<map<...>> and struct-wrapped maps are just as
-    un-groupable/un-orderable as a top-level map — detection must
-    recurse (round-3 review finding)."""
-    from pyspark.sql import functions as F
-
-    from radiant_portal_pipeline_spark.cdc.dedup import argmax_eligible
-
+    """Map payloads (top-level map, array<map<...>>, struct-wrapped
+    map) can be neither grouped nor ordered; the window never compares
+    payloads, so each dedups to the key's one newest row."""
     base = _batch(spark, [_ev("c1", 0, "U", 5, "new"), _ev("c1", 0, "U", 3, "old")])
-    nested = base.withColumn(
-        "tags", F.array(F.create_map(F.lit("k"), F.lit("v")))
-    )
-    assert not argmax_eligible(nested, ["conv_id", "turn_idx"], ["lsn"])
-    out = lww_dedup(nested, ["conv_id", "turn_idx"], ["lsn"])  # auto -> window
-    assert out.count() == 1 and out.head()["lsn"] == 5
-
-    wrapped = base.withColumn(
-        "meta", F.struct(F.create_map(F.lit("k"), F.lit("v")).alias("m"))
-    )
-    assert not argmax_eligible(wrapped, ["conv_id", "turn_idx"], ["lsn"])
-    assert lww_dedup(wrapped, ["conv_id", "turn_idx"], ["lsn"]).count() == 1
+    m = F.create_map(F.lit("k"), F.lit("v"))
+    for df in (
+        base.withColumn("attrs", m),
+        base.withColumn("tags", F.array(m)),
+        base.withColumn("meta", F.struct(m.alias("m"))),
+    ):
+        out = lww_dedup(df, ["conv_id", "turn_idx"], ["lsn"])
+        assert out.count() == 1 and out.head()["lsn"] == 5, df.columns
 
 
 def test_lineage_counts_per_key_with_intra_batch_duplicates(spark, tmp_path):
@@ -498,12 +475,10 @@ def test_lineage_counts_per_key_with_intra_batch_duplicates(spark, tmp_path):
     assert (ins, upd, dele) == (2, 0, 1), (ins, upd, dele)
 
 
-def test_argmax_all_null_order_raises(spark):
+def test_lww_dedup_all_null_order_one_row_per_key(spark):
     """A key whose rows are ALL NULL in the order column has no defined
-    winner: the argmax plan must fail loudly (round-3 advice: max()
-    ignores NULLs and the null-safe semi join would match every row,
-    silently breaking one-row-per-key), while max_struct keeps its
-    pick-one semantics for callers that opt into it."""
+    winner; the window still keeps exactly one row of it, so the
+    one-row-per-key invariant holds."""
     rows = [
         _ev("c1", 0, "U", 1, "a"),
         _ev("c1", 0, "U", 2, "b"),
@@ -514,10 +489,9 @@ def test_argmax_all_null_order_raises(spark):
         "lsn",
         F.when(F.col("conv_id") != "c1", F.col("lsn")).cast("bigint"),
     )
-    with pytest.raises(Exception, match="ALL-NULL"):
-        lww_dedup(df, ["conv_id", "turn_idx"], ["lsn"], via="argmax").collect()
-    got = lww_dedup(df, ["conv_id", "turn_idx"], ["lsn"], via="max_struct")
+    got = lww_dedup(df, ["conv_id", "turn_idx"], ["lsn"])
     assert got.count() == 2  # one row per key, NULL-order key included
+    assert got.filter(F.col("conv_id") == "c2").head()["lsn"] == 7
 
 
 def test_cow_extreme_lsn_elects_right_winner(spark, tmp_path):

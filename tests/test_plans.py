@@ -58,19 +58,6 @@ def _bare_engine():
     return eng
 
 
-def test_top1_window_vs_agg_same_result_different_plan(spark, sf_smoke):
-    """The engine's LWW (aggregate) and the reference's row_number
-    (window+sort) are plan-distinct but result-identical."""
-    from radiant_portal_pipeline_spark.cdc.dedup import lww_dedup
-
-    feed = synthetic_feed(spark, 2000)
-    agg = lww_dedup(feed, ["conv_id", "turn_idx"], ["lsn"])
-    win = lww_dedup(feed, ["conv_id", "turn_idx"], ["lsn"], via="window")
-    assert "Window" in plan_of(win, "simple")
-    assert "Window" not in plan_of(agg, "simple")
-    assert sorted(map(tuple, agg.collect())) == sorted(map(tuple, win.collect()))
-
-
 def test_bucketed_tables_join_without_shuffle(spark, sf_smoke):
     """X7/J9: co-located storage joins — two tables bucketed on the join
     key join with NO exchange (the reference's colocate_with groups,
@@ -165,8 +152,9 @@ def test_aqe_splits_skewed_join_partition(spark):
 
 
 def _with_map_payload(feed):
-    """A map payload can be neither a grouping key nor ordered inside a
-    max-struct, so no aggregate-based argmax plan can fold it."""
+    """A map payload can be neither a grouping key nor ordered, so no
+    aggregate-based LWW plan could fold it; the window never compares
+    payloads."""
     return feed.withColumn("attrs", F.create_map(F.lit("k"), F.col("role")))
 
 

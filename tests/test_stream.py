@@ -73,7 +73,10 @@ def test_stream_end_to_end_with_resume(spark, tmp_path, sf_smoke):
     }
     sink_wm = {
         r["part"]: r["applied_lsn"]
-        for r in engine2.applied_lsn_watermarks().collect()
+        for r in engine2.raw_state()
+        .groupBy("part")
+        .agg(F.max("lsn").alias("applied_lsn"))
+        .collect()
     }
     assert cum == sink_wm
     totals = lin.agg(

@@ -108,7 +108,7 @@ def test_spark_submit_pyfiles_replay_roundtrip(tmp_path, spark):
     want = sorted(
         map(
             tuple,
-            lww_dedup(oracle_feed, ["conv_id", "turn_idx"], ["lsn"], via="window")
+            lww_dedup(oracle_feed, ["conv_id", "turn_idx"], ["lsn"])
             .filter(F.col("op") != "D")
             .select(*eng.current_state().columns)
             .collect(),
