@@ -69,6 +69,19 @@ def test_lww_dedup_verbatim_dups_one_row_per_key(spark):
     )
 
 
+def test_lww_argmax_rejects_ineligible_schema(spark):
+    """A map payload can be neither grouped nor ordered, so no argmax
+    plan can serve it. ``lww_dedup`` has no strategy selector left: a
+    ``via=`` request is rejected, and the window dedups the map payload
+    to the key's one row."""
+    df = _batch(spark, [_ev("c1", 0, "U", 5, "x")]).withColumn(
+        "attrs", F.create_map(F.lit("k"), F.lit("v"))
+    )
+    with pytest.raises(TypeError, match="via"):
+        lww_dedup(df, ["conv_id", "turn_idx"], ["lsn"], via="argmax")
+    assert lww_dedup(df, ["conv_id", "turn_idx"], ["lsn"]).count() == 1
+
+
 def test_merge_upsert_update_delete(engine, spark):
     engine.merge_batch(
         _batch(spark, [_ev("c1", 0, "I", 1, "hello"), _ev("c1", 1, "I", 2, "world")]),
