@@ -67,8 +67,6 @@ class LineageWriter:
         parts: list,
         seconds: float,
         prior_version: int,
-        key_cols: list[str],
-        lsn_col: str = S.LSN_COL,
         plan: str = "",
         source_id: str = "",
     ) -> None:
@@ -83,10 +81,10 @@ class LineageWriter:
         and the single output partition is written as one append."""
         if not parts:
             return
-        keys = [S.PART_COL, *key_cols]
+        keys = [S.PART_COL, *S.KEY_COLS]
         new = prepared_batch.select(
             *keys,
-            F.col(lsn_col).alias("_lsn"),
+            F.col(S.LSN_COL).alias("_lsn"),
             F.col(S.DELETED_COL).alias("_del"),
             F.lit(False).alias("_old"),
         )

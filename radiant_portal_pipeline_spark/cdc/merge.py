@@ -86,8 +86,6 @@ class TranscriptMergeEngine:
         table: LakeTable,
         num_buckets: int | None = None,
         source_id: str = "cdc",
-        key_cols: tuple[str, ...] = S.KEY_COLS,
-        lsn_col: str = S.LSN_COL,
         mode: str = "mor",
         lineage=None,
         quarantine: "LakeTable | None" = None,
@@ -112,8 +110,6 @@ class TranscriptMergeEngine:
             resolved = 32
         self.num_buckets = int(resolved)
         self.source_id = source_id
-        self.key_cols = list(key_cols)
-        self.lsn_col = lsn_col
         self.mode = mode
         self.lineage = lineage  # optional LineageWriter (cdc.lineage)
         # dead-letter table: when set, contract-violating rows (NULL
@@ -169,10 +165,10 @@ class TranscriptMergeEngine:
         both tables (exactly-once extends to the dead letters)."""
         reason = (
             F.when(
-                sum(F.col(c).isNull().cast("int") for c in self.key_cols) > 0,
+                sum(F.col(c).isNull().cast("int") for c in S.KEY_COLS) > 0,
                 F.lit("null_merge_key"),
             )
-            .when(F.col(self.lsn_col).isNull(), F.lit("null_lsn"))
+            .when(F.col(S.LSN_COL).isNull(), F.lit("null_lsn"))
         )
         bad = (
             batch.withColumn("_reason", reason)
@@ -203,7 +199,7 @@ class TranscriptMergeEngine:
         order columns. Equal-order rows must be verbatim duplicates
         (``dedup.py``'s tie contract), so any one of them may win."""
         laid = df.repartition(self.num_buckets, F.col(S.PART_COL))
-        return lww_dedup(laid, [S.PART_COL, *self.key_cols], order_cols)
+        return lww_dedup(laid, [S.PART_COL, *S.KEY_COLS], order_cols)
 
     def _prepare_batch(self, batch: DataFrame) -> DataFrame:
         """Fold op -> tombstone flag, add bucket, then LWW-dedup and lay
@@ -217,15 +213,15 @@ class TranscriptMergeEngine:
         # inside the plan (raise_error branch) — no extra pass; the
         # first violating row fails the batch with a clear message.
         key_ok = F.lit(True)
-        for c in (*self.key_cols, self.lsn_col):
+        for c in (*S.KEY_COLS, S.LSN_COL):
             key_ok = key_ok & F.col(c).isNotNull()
         checked_part = F.when(
-            key_ok, part_expr(self.key_cols[0], self.num_buckets)
+            key_ok, part_expr(S.KEY_COLS[0], self.num_buckets)
         ).otherwise(
             F.raise_error(
                 F.lit(
                     f"CDC batch contains NULL in a key column "
-                    f"({', '.join(self.key_cols)}, {self.lsn_col})"
+                    f"({', '.join(S.KEY_COLS)}, {S.LSN_COL})"
                 )
             ).cast("int")
         )
@@ -234,7 +230,7 @@ class TranscriptMergeEngine:
             .withColumn(S.DELETED_COL, (F.col("op") == F.lit("D")))
             .drop("op", "commit_epoch")
         )
-        return self._lww_layout(slim, [self.lsn_col])
+        return self._lww_layout(slim, [S.LSN_COL])
 
     def merge_batch(self, batch: DataFrame, epoch: int) -> MergeStats:
         """Apply one micro-batch under ``epoch`` (a replayed epoch is a
@@ -254,20 +250,21 @@ class TranscriptMergeEngine:
             result = self.table.append(
                 prepared, source_id=self.source_id, epoch=epoch, layout_ready=True
             )
-            parts = [int(p) for p in self.table.last_commit_partitions]
+            if result is None:  # a concurrent writer applied this epoch
+                return MergeStats(epoch=epoch, skipped=True)
+            parts = [int(p) for p in sorted(result.added)]
             stats = MergeStats(
                 epoch=epoch,
-                skipped=result is None,
+                skipped=False,
                 parts_touched=len(parts),
                 parts=parts,
                 seconds=time.time() - t0,
             )
-            if self.lineage is not None and not stats.skipped:
+            if self.lineage is not None:
                 # lineage reads the commit's own delta files back, so it
                 # describes exactly the committed bytes
-                committed = self.table.read_files(
-                    self.table.last_commit_files, result.schema
-                )
+                added = sorted(f for fs in result.added.values() for f in fs)
+                committed = self.table.read_files(added, result.schema)
                 self._record_lineage(stats, committed, snap.version)
             return stats
 
@@ -287,7 +284,7 @@ class TranscriptMergeEngine:
         src = prepared.withColumn(_SRC_RANK, F.lit(1))
         tgt = existing.withColumn(_SRC_RANK, F.lit(0))
         unioned = src.unionByName(tgt, allowMissingColumns=True)
-        merged = self._lww_layout(unioned, [self.lsn_col, _SRC_RANK]).drop(_SRC_RANK)
+        merged = self._lww_layout(unioned, [S.LSN_COL, _SRC_RANK]).drop(_SRC_RANK)
         result = self.table.overwrite_partitions(
             merged,
             source_id=self.source_id,
@@ -319,8 +316,6 @@ class TranscriptMergeEngine:
             parts=stats.parts,
             seconds=stats.seconds,
             prior_version=prior_version,
-            key_cols=self.key_cols,
-            lsn_col=self.lsn_col,
             plan=stats.plan,
             source_id=self.source_id,
         )
@@ -331,13 +326,13 @@ class TranscriptMergeEngine:
     def _bucket_needs_compaction(
         snap, part: str, min_files: int | None, small_bytes: int | None
     ) -> bool:
-        fs = snap.files.get(part, [])
+        fs, st = snap.part_entry(part)
         if len(fs) < 2:
             return False  # already one file (or empty) — nothing to fold
         if min_files is not None and len(fs) >= min_files:
             return True
         if small_bytes is not None:
-            sizes = [snap.stats.get(f, {}).get("_bytes") for f in fs]
+            sizes = [st.get(f, {}).get("_bytes") for f in fs]
             known = [s for s in sizes if s is not None]
             if known and sum(known) / len(known) < small_bytes:
                 return True
@@ -392,7 +387,7 @@ class TranscriptMergeEngine:
         if partitions is not None:
             parts = list(partitions)
         else:
-            parts = sorted(snap.files.keys())
+            parts = snap.partition_values()
             if min_files_per_bucket is not None or small_file_bytes is not None:
                 parts = [
                     p
@@ -404,19 +399,19 @@ class TranscriptMergeEngine:
         if not parts:
             return []
         fold_in = self.table.read(partitions=parts, version=snap.version)
-        folded = self._lww_layout(fold_in, [self.lsn_col])
+        folded = self._lww_layout(fold_in, [S.LSN_COL])
         if purge_tombstones_below is not None:
             folded = folded.filter(
                 ~(
                     F.col(S.DELETED_COL)
-                    & (F.col(self.lsn_col) < purge_tombstones_below)
+                    & (F.col(S.LSN_COL) < purge_tombstones_below)
                 )
             )
         # swap exactly the files the fold READ; files appended after
         # the pinned snapshot stay live (MoR reads LWW over them)
         self.table.rewrite_files(
             folded,
-            replace={p: snap.files.get(str(p), []) for p in parts},
+            replace={p: snap.part_entry(str(p))[0] for p in parts},
             layout_ready=True,
         )
         return parts
@@ -464,7 +459,7 @@ class TranscriptMergeEngine:
         )
         folded = self.raw_state(version=snap0.version).drop(S.PART_COL)
         relaid = folded.withColumn(
-            S.PART_COL, part_expr(self.key_cols[0], new_buckets)
+            S.PART_COL, part_expr(S.KEY_COLS[0], new_buckets)
         ).repartition(new_buckets, F.col(S.PART_COL))
         new_tbl.append(relaid, layout_ready=True)
         new_tbl.carry_applied(snap0.applied)
@@ -479,8 +474,6 @@ class TranscriptMergeEngine:
         return TranscriptMergeEngine(
             new_tbl,
             source_id=self.source_id,
-            key_cols=tuple(self.key_cols),
-            lsn_col=self.lsn_col,
             mode=self.mode,
             lineage=self.lineage,
             quarantine=self.quarantine,
@@ -505,10 +498,10 @@ class TranscriptMergeEngine:
         lsn > ``since_lsn`` BEFORE the LWW (so a key's winner is its
         newest change after the watermark). The LWW is the write path's
         operator (``_lww_layout``), one exchange for the whole read."""
-        skip = None if since_lsn is None else {self.lsn_col: (since_lsn + 1, None)}
+        skip = None if since_lsn is None else {S.LSN_COL: (since_lsn + 1, None)}
         df = self.table.read(partitions=partitions, version=version, skip=skip)
         if since_lsn is not None:
-            df = df.filter(F.col(self.lsn_col) > since_lsn)
+            df = df.filter(F.col(S.LSN_COL) > since_lsn)
         if self.mode == "mor":
-            df = self._lww_layout(df, [self.lsn_col])
+            df = self._lww_layout(df, [S.LSN_COL])
         return df

@@ -48,7 +48,7 @@ import random
 import shutil
 import time
 import uuid
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -344,6 +344,9 @@ class Snapshot:
         self._blob_loader = blob_loader  # name -> {"files": [...], "stats": {...}}
         self._files: dict[str, list[str]] | None = None
         self._stats: dict[str, dict[str, Any]] | None = None
+        # {partition -> files this commit wrote}: set on the snapshot a
+        # data commit returns, held in memory only (never serialized)
+        self.added: dict[str, list[str]] = {}
 
     # --- lazy full materialization
 
@@ -447,10 +450,6 @@ class LakeTable:
         self.spark = spark
         self.path = path
         self.commit_protocol = commit_protocol or PosixCommitProtocol()
-        # partitions touched by this instance's most recent data commit,
-        # and the data files it wrote (relative paths; see read_files)
-        self.last_commit_partitions: list[str] = []
-        self.last_commit_files: list[str] = []
         self._blob_cache: dict[str, dict] = {}  # manifest blobs are immutable
 
     # ------------------------------------------------- manifest blobs
@@ -583,7 +582,7 @@ class LakeTable:
 
     def read_files(self, files: list[str], schema: T.StructType) -> DataFrame:
         """Scan exactly ``files`` (paths relative to the table root, e.g.
-        ``last_commit_files``) under ``schema``."""
+        the ones a commit added, ``Snapshot.added``) under ``schema``."""
         if not files:
             return self.spark.createDataFrame([], schema)
         paths = [os.path.join(self.path, f) for f in files]
@@ -644,7 +643,7 @@ class LakeTable:
         holds rows of every partition value and partitionBy fans out
         tasks x values tiny files. Callers whose plan is ALREADY
         hash-partitioned on the partition column (e.g. the merge
-        engine, which repartitions before its LWW aggregation) pass
+        engine, which repartitions before its LWW window) pass
         ``layout_ready=True`` to skip the extra exchange.
         """
         commit_dir = f"commit-{uuid.uuid4().hex}"
@@ -771,31 +770,78 @@ class LakeTable:
                 cols.append(F.col(f.name))
         return df.select(*cols)
 
-    def _stage(
+    def _commit_files(
         self,
         df: DataFrame,
         layout_ready: bool,
+        takes: Callable[[dict[str, list[str]]], dict[str, list[str] | None]],
         source_id: str | None = None,
         epoch: int | None = None,
         base_version: int | None = None,
-    ) -> tuple[Snapshot, dict[str, list[str]], dict[str, dict[str, Any]]] | None:
-        """The first half of every data commit: pin the base snapshot,
-        skip an already-applied ``(source_id, epoch)`` before the
-        (expensive) write, evolve the schema and write the conformed
-        data files. Returns ``(base snapshot, {partition -> files},
-        {file -> stats})``, or None when the epoch guard made the commit
-        a no-op."""
+    ) -> Snapshot | None:
+        """The one data commit (Iceberg's AppendFiles, ReplacePartitions
+        and RewriteFiles differ only in what they take). Staging pins the
+        base snapshot, skips an already-applied ``(source_id, epoch)``
+        before the (expensive) write, evolves the schema and writes the
+        conformed files. The commit then, partition by partition,
+        removes the files it takes, adds the new ones, drops a partition
+        left with no files and publishes the touched manifest blobs.
+
+        ``takes(new_files)`` gets ``{partition -> files written}`` and
+        returns ``{partition -> files taken}``, where a list names live
+        files (each must still be live, or a concurrent rewrite took it)
+        and None takes the whole partition as of the base snapshot (its
+        ref must not have moved since). The returned snapshot's
+        ``added`` is ``new_files``; None when the epoch guard made the
+        commit a no-op."""
         snap0 = self.snapshot(base_version)
         if _already_applied(snap0, source_id, epoch):
             return None
-        schema = self._evolved_schema(snap0, df)
         new_files, new_stats = self._write_data_files(
-            self._conform(df, schema),
+            self._conform(df, self._evolved_schema(snap0, df)),
             snap0.partition_col,
             layout_ready=layout_ready,
             stat_cols=snap0.properties.get("stats_cols"),
         )
-        return snap0, new_files, new_stats
+        taken_by_part = takes(new_files)
+
+        def mutate(snap: Snapshot):
+            entries, emptied = {}, set()
+            for pv in dict.fromkeys([*new_files, *taken_by_part]):
+                taken = taken_by_part.get(pv, [])
+                if taken is None:
+                    # blob names are content hashes, so ref equality IS
+                    # file-list equality: no blob is loaded to validate
+                    if snap.refs.get(pv) != snap0.refs.get(pv):
+                        raise ConcurrentModification(
+                            f"partition {pv!r} changed concurrently; recompute "
+                            f"from a fresh snapshot before replacing it"
+                        )
+                    old_files, old_stats = [], {}
+                else:
+                    old_files, old_stats = snap.part_entry(pv)
+                    missing = [f for f in taken if f not in old_files]
+                    if missing:
+                        raise ConcurrentModification(
+                            f"files {missing[:3]} in partition {pv!r} were "
+                            f"rewritten concurrently; recompute the fold"
+                        )
+                    taken_set = set(taken)
+                    old_files = [f for f in old_files if f not in taken_set]
+                fs = old_files + new_files.get(pv, [])
+                if not fs:
+                    emptied.add(pv)
+                    continue
+                st = {**old_stats, **new_stats}
+                entries[pv] = (fs, {f: st[f] for f in fs if f in st})
+            refs = {k: v for k, v in snap.refs.items() if k not in emptied}
+            refs.update(self._publish_blobs(entries))
+            return {"schema": self._evolved_schema(snap, df), "refs": refs}
+
+        out = self._commit(mutate, source_id=source_id, epoch=epoch)
+        if out is not None:
+            out.added = new_files
+        return out
 
     def append(
         self,
@@ -806,24 +852,9 @@ class LakeTable:
     ) -> Snapshot | None:
         """Add files; existing partitions keep their files (fast path for
         immutable feeds). Schema evolves additively first."""
-        staged = self._stage(df, layout_ready, source_id, epoch)
-        if staged is None:
-            return None
-        _snap0, new_files, new_stats = staged
-
-        def mutate(snap: Snapshot):
-            entries = {}
-            for pv, fs in new_files.items():
-                old_files, old_stats = snap.part_entry(pv)
-                new = {f: new_stats[f] for f in fs}
-                entries[pv] = (old_files + fs, {**old_stats, **new})
-            refs = {**snap.refs, **self._publish_blobs(entries)}
-            return {"schema": self._evolved_schema(snap, df), "refs": refs}
-
-        out = self._commit(mutate, source_id=source_id, epoch=epoch)
-        self.last_commit_partitions = sorted(new_files.keys())
-        self.last_commit_files = sorted(f for fs in new_files.values() for f in fs)
-        return out
+        return self._commit_files(
+            df, layout_ready, lambda new: {}, source_id=source_id, epoch=epoch
+        )
 
     def overwrite_partitions(
         self,
@@ -846,35 +877,15 @@ class LakeTable:
         ABORTS with ConcurrentModification: the replacement lacks the
         concurrent files and silently rebasing would drop them.
         Disjoint-partition commits still rebase and land."""
-        staged = self._stage(df, layout_ready, source_id, epoch, base_version)
-        if staged is None:
-            return None
-        snap0, new_files, new_stats = staged
-        replaced = set(new_files.keys()) | {str(p) for p in (also_replace or [])}
-
-        # blob names are content hashes, so ref equality IS file-list
-        # equality — conflict validation never loads untouched blobs
-        expected = {p: snap0.refs.get(p) for p in replaced}
-
-        def mutate(snap: Snapshot):
-            for p in replaced:
-                if snap.refs.get(p) != expected[p]:
-                    raise ConcurrentModification(
-                        f"partition {p!r} changed concurrently; recompute "
-                        f"from a fresh snapshot before replacing it"
-                    )
-            entries = {
-                pv: (fs, {f: new_stats[f] for f in fs})
-                for pv, fs in new_files.items()
-            }
-            refs = {k: v for k, v in snap.refs.items() if k not in replaced}
-            refs.update(self._publish_blobs(entries))
-            return {"schema": self._evolved_schema(snap, df), "refs": refs}
-
-        out = self._commit(mutate, source_id=source_id, epoch=epoch)
-        self.last_commit_partitions = sorted(replaced)
-        self.last_commit_files = sorted(f for fs in new_files.values() for f in fs)
-        return out
+        also = [str(p) for p in (also_replace or [])]
+        return self._commit_files(
+            df,
+            layout_ready,
+            lambda new: dict.fromkeys([*new, *also]),
+            source_id=source_id,
+            epoch=epoch,
+            base_version=base_version,
+        )
 
     def rewrite_files(
         self,
@@ -900,52 +911,21 @@ class LakeTable:
         fold produced no output (e.g. all rows tombstone-purged) simply
         loses its input files; one left with no files at all leaves the
         table, as in ``overwrite_partitions``."""
-        _snap0, new_files, new_stats = self._stage(df, layout_ready)
         # normalize BEFORE the unknown-partition check: _write_data_files
         # returns directory-string keys, and callers may pass raw (e.g.
         # int) partition values in `replace`
         replace = {str(p): list(fs) for p, fs in replace.items()}
-        unknown = set(new_files) - set(replace)
-        if unknown:
-            raise ValueError(
-                f"rewrite produced rows for partitions it did not read: "
-                f"{sorted(unknown)}"
-            )
 
-        def mutate(snap: Snapshot):
-            entries, emptied = {}, set()
-            for pv, taken in replace.items():
-                old_files, old_stats = snap.part_entry(pv)
-                missing = [f for f in taken if f not in old_files]
-                if missing:
-                    raise ConcurrentModification(
-                        f"files {missing[:3]} in partition {pv!r} were "
-                        f"rewritten concurrently; recompute the fold"
-                    )
-                taken_set = set(taken)
-                fs = [f for f in old_files if f not in taken_set]
-                fs += new_files.get(pv, [])
-                if not fs:
-                    emptied.add(pv)
-                    continue
-                st = {**old_stats, **new_stats}
-                entries[pv] = (fs, {f: st[f] for f in fs if f in st})
-            refs = {k: v for k, v in snap.refs.items() if k not in emptied}
-            refs.update(self._publish_blobs(entries))
-            return {"schema": self._evolved_schema(snap, df), "refs": refs}
+        def takes(new_files):
+            unknown = set(new_files) - set(replace)
+            if unknown:
+                raise ValueError(
+                    f"rewrite produced rows for partitions it did not read: "
+                    f"{sorted(unknown)}"
+                )
+            return replace
 
-        out = self._commit(mutate)
-        assert out is not None
-        # deliberately does NOT touch self.last_commit_partitions (nor
-        # last_commit_files):
-        # rewrite_files is designed to run CONCURRENTLY with an ingest
-        # thread on the same handle (every compact() commits here),
-        # and merge_batch reads last_commit_partitions right after its
-        # append — a background rewrite overwriting it in that window
-        # would misreport the batch's touched buckets to lineage and
-        # incremental-aggregate refresh (round-5 review finding #4).
-        # Callers get the touched set from their own `replace` arg.
-        return out
+        return self._commit_files(df, layout_ready, takes)
 
     # ------------------------------------------------------- maintenance
 

@@ -658,15 +658,19 @@ def test_compaction_rebases_over_append_landing_mid_fold(spark, tmp_path):
     eng.merge_batch(batches[1], epoch=1)
     ingest = TranscriptMergeEngine(LakeTable(spark, eng.table.path), num_buckets=4)
     fold = eng._lww_layout
+    ingested = []
 
     def fold_then_ingest(*args, **kwargs):
         out = fold(*args, **kwargs)
+        before = set(ingest.table.live_files())
         ingest.merge_batch(batches[2], epoch=2)
+        # a MoR merge only adds files
+        ingested.extend(set(ingest.table.live_files()) - before)
         return out
 
     eng._lww_layout = fold_then_ingest
     assert eng.compact()
-    assert set(ingest.table.last_commit_files) <= set(eng.table.live_files())
+    assert ingested and set(ingested) <= set(eng.table.live_files())
     assert sorted(map(tuple, eng.current_state().collect())) == sorted(
         map(tuple, ref.current_state().collect())
     )
@@ -724,23 +728,3 @@ def test_s3_publish_412_get_retries_transport_errors():
     proto2.publish("/t/_m/v1.json", b"one")
     with pytest.raises(_ClientError):
         proto2.publish("/t/_m/v1.json", b"one")
-
-
-def test_rewrite_files_does_not_clobber_last_commit_partitions(spark, tmp_path):
-    """merge_batch reads table.last_commit_partitions and
-    last_commit_files right after its append; a concurrent
-    rewrite_files must not overwrite either."""
-    path = str(tmp_path / "t")
-    tbl = LakeTable.create(spark, path, SCHEMA, "part")
-    tbl.append(spark.createDataFrame([("a", 1, 0), ("b", 2, 1)], SCHEMA))
-    marker = list(tbl.last_commit_partitions)
-    base_files = {p: list(fs) for p, fs in tbl.snapshot().files.items()}
-    # the commit-files record names exactly the files the append wrote
-    marker_files = list(tbl.last_commit_files)
-    assert marker_files == sorted(f for fs in base_files.values() for f in fs)
-    tbl.rewrite_files(
-        spark.createDataFrame([("a", 1, 0), ("b", 2, 1)], SCHEMA),
-        replace=base_files,
-    )
-    assert tbl.last_commit_partitions == marker
-    assert tbl.last_commit_files == marker_files

@@ -290,6 +290,40 @@ def test_split_manifest_pruned_read_loads_only_needed_blobs(spark, tmp_path):
     assert fresh.live_files(partitions=[1], skip={"v": (100, None)}) == []
 
 
+def test_commit_added_names_exactly_the_files_it_wrote(spark, tmp_path):
+    """The snapshot a data commit returns names, per partition, exactly
+    the files that commit wrote: for an append, for an overwrite whose
+    also_replace empties a partition, and for a file-scoped rewrite.
+    ``added`` is held in memory only; a re-read snapshot has none."""
+    tbl = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, "part")
+
+    def written(snap):
+        return {f for fs in snap.added.values() for f in fs}
+
+    snap = tbl.append(_df(spark, [("a", 1, 0), ("b", 2, 1)]))
+    assert snap.added == tbl.snapshot().files
+    assert sorted(snap.added) == ["0", "1"]
+    before = set(tbl.live_files())
+    snap = tbl.append(_df(spark, [("c", 3, 1)]))
+    assert list(snap.added) == ["1"]
+    assert written(snap) == set(tbl.live_files()) - before
+
+    snap = tbl.overwrite_partitions(_df(spark, [("a2", 4, 0)]), also_replace=[1])
+    assert list(snap.added) == ["0"]  # partition 1 emptied, nothing written
+    assert tbl.partitions() == ["0"]
+    assert written(snap) == set(tbl.live_files())
+
+    taken = tbl.snapshot().files
+    snap = tbl.rewrite_files(_df(spark, [("a2", 4, 0)]), replace=taken)
+    assert list(snap.added) == ["0"]
+    assert written(snap) == set(tbl.live_files())
+    assert not written(snap) & set(taken["0"])
+
+    assert tbl.append(_df(spark, [("d", 5, 2)]), source_id="s", epoch=1).added
+    assert tbl.append(_df(spark, [("d", 5, 2)]), source_id="s", epoch=1) is None
+    assert tbl.snapshot().added == {}
+
+
 def test_split_manifest_overwrite_replace_and_conflict(spark, tmp_path):
     import pytest
 

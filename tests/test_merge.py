@@ -251,6 +251,34 @@ def test_incremental_compaction_policy_bounds_files(spark, tmp_path):
     assert tbl.snapshot().version == v
 
 
+def test_pruned_compaction_loads_only_its_own_blobs(spark, tmp_path):
+    """compact(partitions=[p]) on a cold handle loads the manifest blob
+    of p only (it reads, selects and swaps p's files), and the fold
+    leaves the state as it was."""
+    from radiant_portal_pipeline_spark.lake import LakeTable
+
+    tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=4)
+    eng = TranscriptMergeEngine(tbl, num_buckets=4)
+    for e in range(2):
+        eng.merge_batch(
+            _batch(spark, [
+                _ev(f"c{i}", 0, "U", e * 100 + i, f"t{e}-{i}") for i in range(40)
+            ]),
+            epoch=e,
+        )
+    want = state(eng)
+    cold = TranscriptMergeEngine(LakeTable(spark, tbl.path), num_buckets=4)
+    snap = cold.table.snapshot()
+    target, *others = snap.partition_values()
+    assert others
+    assert cold.compact(partitions=[int(target)]) == [int(target)]
+    loaded = set(cold.table._blob_cache)
+    assert snap.refs[target] in loaded
+    assert not loaded & {snap.refs[p] for p in others}
+    assert len(tbl.live_files(partitions=[target])) == 1
+    assert state(eng) == want
+
+
 def test_changes_since_prunes_files_and_is_lww_correct(spark, tmp_path):
     tbl = TranscriptMergeEngine.create_table(spark, str(tmp_path / "t"), num_buckets=2)
     eng = TranscriptMergeEngine(tbl, mode="mor")
@@ -550,8 +578,11 @@ def test_mor_commit_holds_one_row_per_key(spark, tmp_path):
     hot = {(f"hot-{j}", 0): 650 for j in range(3)}
     hot.update({(f"d-{i}", 0): 1 for i in range(100)})
     for epoch, spec in enumerate([insert_dominant, hot]):
+        before = set(tbl.live_files())
         eng.merge_batch(_keyed_batch(spark, spec, lsn0=epoch * 10_000), epoch=epoch)
-        committed = tbl.read_files(tbl.last_commit_files, tbl.snapshot().schema)
+        # a MoR merge only adds files
+        added = sorted(set(tbl.live_files()) - before)
+        committed = tbl.read_files(added, tbl.snapshot().schema)
         per_key = committed.groupBy("part", "conv_id", "turn_idx").count()
         assert per_key.count() == len(spec), epoch
         assert per_key.agg(F.max("count")).head()[0] == 1, epoch

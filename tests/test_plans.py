@@ -53,8 +53,6 @@ def test_filter_and_projection_pushdown(spark, sf_smoke):
 def _bare_engine():
     eng = TranscriptMergeEngine.__new__(TranscriptMergeEngine)
     eng.num_buckets = 16
-    eng.key_cols = ["conv_id", "turn_idx"]
-    eng.lsn_col = "lsn"
     return eng
 
 
@@ -292,3 +290,20 @@ def test_range_bin_overlap_join_canonical_bin_exactly_once(spark):
     assert len(got) == len(set(got))  # exactly-once, not distinct'd
     plan = plan_of(out, mode="simple")
     assert "Deduplicate" not in plan and "dropDuplicates" not in plan
+
+
+def test_plan_fingerprint_is_stable_within_a_session(spark, tmp_path):
+    """``tools/plan_fingerprint.py`` masks everything that differs
+    between two runs of one plan (expression and plan ids, paths, file
+    names), so a diff of its output across commits shows plan changes
+    only: two runs in one session print the same text."""
+    import re
+
+    from tools.plan_fingerprint import fingerprint
+
+    first = fingerprint(spark, str(tmp_path / "a"))
+    assert first == fingerprint(spark, str(tmp_path / "b"))
+    # 2 modes x 2 payloads x 4 DataFrames
+    assert first.count("== Physical Plan ==") == 16
+    assert "Window" in first and "<FILE>" in first
+    assert not re.search(r"#\d|plan_id=\d|" + re.escape(str(tmp_path)), first)
